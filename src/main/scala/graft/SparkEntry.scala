@@ -23,6 +23,37 @@ object SparkEntry {
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
     ParquetConnector.readTable(s, s"$dir/$name.parquet")
 
+  /** A crawl workspace seeded the way a pre-generation release looked:
+    * `docs` as `release_current` plus every
+    * [[pipelines.WorkspaceIndex]] built from it (MinHash buckets capped
+    * at `maxBucketSize`), in a fresh `prefix`-named temp dir. */
+  private def seedWorkspace(s: SparkSession, prefix: String, docs: DataFrame,
+                            maxBucketSize: Int = 2000): (String, ParquetConnector) = {
+    val work = java.nio.file.Files.createTempDirectory(prefix).toString
+    val conn = new ParquetConnector(s, work)
+    conn.write(docs, "release_current")
+    pipelines.WorkspaceIndex.all(maxBucketSize = maxBucketSize)
+      .foreach(ix => conn.write(ix.rows(docs), ix.table))
+    (work, conn)
+  }
+
+  /** The `lead` columns of `docs` (doc_id, text, …) followed by each
+    * doc's membership after a workspace tick — `in_release`, then
+    * `in_<name>` per workspace index, matched on the key a takedown
+    * retires it by — ordered by doc_id. */
+  private def workspaceMembership(conn: ParquetConnector, docs: DataFrame,
+                                  lead: Column*): DataFrame = {
+    val members = ("in_release" -> conn.read("release_current").select(col("doc_id"))) +:
+      pipelines.WorkspaceIndex.all().map { ix =>
+        val (by, idxCol) = ix.retireBy
+        s"in_${ix.name}" -> conn.read(ix.table).select(col(idxCol).as(by))
+      }
+    members.foldLeft(pipelines.WorkspaceIndex.keyed(docs)) { case (d, (flag, m)) =>
+      d.join(m.distinct().withColumn(flag, lit(true)), m.columns.toSeq, "left")
+    }.select(lead ++ members.map { case (f, _) => coalesce(col(f), lit(false)).as(f) }: _*)
+      .orderBy(col("doc_id"))
+  }
+
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_join_nation_revenue")(spark, "/root/testdata/sf0.001")
@@ -3220,34 +3251,13 @@ object SparkEntry {
         // one parquet scan: release + 3 index writes + the readback all
         // derive from this planted frame (r19)
         .localCheckpoint(true)
-      val work = java.nio.file.Files.createTempDirectory("graft_takedown_")
-        .toString
-      val conn = new sources.ParquetConnector(s, work)
-      conn.write(docs, "release_current")
-      conn.write(operators.Dedup.fingerprintIndex(docs, "text"), "fp_index")
-      conn.write(operators.Dedup.minhashIndex(docs, "text", "doc_id"), "mh_index")
-      conn.write(operators.Dedup.chunkIndex(docs, "text", "doc_id"), "chunk_index")
+      val (work, conn) = seedWorkspace(s, "graft_takedown_", docs)
       val plan = new plans.Plan(s, plans.PlanConfig(pidDir = work + "/pid"))
       pipelines.TrainingDataPipeline.takedownTick(plan, work,
         docs.filter(col("doc_id") % 62 === 0).select(col("doc_id")))
       plan.run()
-      val rel = conn.read("release_current").select(col("doc_id"))
-        .withColumn("_rel", lit(true))
-      val mh = conn.read("mh_index").select(col("_id").as("doc_id")).distinct()
-        .withColumn("_mh", lit(true))
-      val ch = conn.read("chunk_index").select(col("doc_id")).distinct()
-        .withColumn("_ch", lit(true))
-      val fp = conn.read("fp_index").select(col("fp").as("_fp"))
-        .withColumn("_infp", lit(true))
-      docs.withColumn("_fp", TextFunctions.fingerprint(col("text")))
-        .join(rel, Seq("doc_id"), "left").join(mh, Seq("doc_id"), "left")
-        .join(ch, Seq("doc_id"), "left").join(fp, Seq("_fp"), "left")
-        .select(col("doc_id"), (col("doc_id") % 62 === 0).as("removed"),
-          coalesce(col("_rel"), lit(false)).as("in_release"),
-          coalesce(col("_infp"), lit(false)).as("in_fp"),
-          coalesce(col("_mh"), lit(false)).as("in_mh"),
-          coalesce(col("_ch"), lit(false)).as("in_chunk"))
-        .orderBy(col("doc_id"))
+      workspaceMembership(conn, docs,
+        col("doc_id"), (col("doc_id") % 62 === 0).as("removed"))
     }),
 
     "q_revocation_tick" -> ((s, dir) => {
@@ -3269,13 +3279,7 @@ object SparkEntry {
               (col("doc_id") % 3 + 1).cast("int")), id).as("url"))
         // one scan for the 4 workspace writes + robots + readback (r19)
         .localCheckpoint(true)
-      val work = java.nio.file.Files.createTempDirectory("graft_revoke_")
-        .toString
-      val conn = new sources.ParquetConnector(s, work)
-      conn.write(docs, "release_current")
-      conn.write(operators.Dedup.fingerprintIndex(docs, "text"), "fp_index")
-      conn.write(operators.Dedup.minhashIndex(docs, "text", "doc_id"), "mh_index")
-      conn.write(operators.Dedup.chunkIndex(docs, "text", "doc_id"), "chunk_index")
+      val (work, conn) = seedWorkspace(s, "graft_revoke_", docs)
       val robots = docs
         .select(concat(lit("h"), (col("doc_id") % 7).cast("string"), lit(".com"))
           .as("host")).distinct()
@@ -3285,25 +3289,9 @@ object SparkEntry {
       pipelines.TrainingDataPipeline.revocationTick(plan, work, robots,
         "hkey", "txt", "graftbot")
       plan.run()
-      val rel = conn.read("release_current").select(col("doc_id"))
-        .withColumn("_rel", lit(true))
-      val mh = conn.read("mh_index").select(col("_id").as("doc_id")).distinct()
-        .withColumn("_mh", lit(true))
-      val ch = conn.read("chunk_index").select(col("doc_id")).distinct()
-        .withColumn("_ch", lit(true))
-      val fp = conn.read("fp_index").select(col("fp").as("_fp"))
-        .withColumn("_infp", lit(true))
       val rev = conn.read("revocations").select(col("doc_id"), col("rule"))
-      docs.withColumn("_fp", TextFunctions.fingerprint(col("text")))
-        .join(rev, Seq("doc_id"), "left")
-        .join(rel, Seq("doc_id"), "left").join(mh, Seq("doc_id"), "left")
-        .join(ch, Seq("doc_id"), "left").join(fp, Seq("_fp"), "left")
-        .select(col("doc_id"), coalesce(col("rule"), lit("")).as("rule"),
-          coalesce(col("_rel"), lit(false)).as("in_release"),
-          coalesce(col("_infp"), lit(false)).as("in_fp"),
-          coalesce(col("_mh"), lit(false)).as("in_mh"),
-          coalesce(col("_ch"), lit(false)).as("in_chunk"))
-        .orderBy(col("doc_id"))
+      workspaceMembership(conn, docs.join(rev, Seq("doc_id"), "left"),
+        col("doc_id"), coalesce(col("rule"), lit("")).as("rule"))
     }),
 
     "q_takedown_domain" -> ((s, dir) => {
@@ -3332,13 +3320,7 @@ object SparkEntry {
           concat(root, lit("/p/"), id).as("url"))
         // one scan for the 4 workspace writes + notices + readback (r19)
         .localCheckpoint(true)
-      val work = java.nio.file.Files.createTempDirectory("graft_takedom_")
-        .toString
-      val conn = new sources.ParquetConnector(s, work)
-      conn.write(docs, "release_current")
-      conn.write(operators.Dedup.fingerprintIndex(docs, "text"), "fp_index")
-      conn.write(operators.Dedup.minhashIndex(docs, "text", "doc_id"), "mh_index")
-      conn.write(operators.Dedup.chunkIndex(docs, "text", "doc_id"), "chunk_index")
+      val (work, conn) = seedWorkspace(s, "graft_takedom_", docs)
       val notices = docs.select((col("doc_id") % 7).cast("string").as("k")).distinct()
         .select(explode(array(
           concat(lit("bad"), col("k"), lit(".com")),
@@ -3346,23 +3328,8 @@ object SparkEntry {
       val plan = new plans.Plan(s, plans.PlanConfig(pidDir = work + "/pid"))
       pipelines.TrainingDataPipeline.takedownByDomain(plan, work, notices)
       plan.run()
-      val rel = conn.read("release_current").select(col("doc_id"))
-        .withColumn("_rel", lit(true))
-      val mh = conn.read("mh_index").select(col("_id").as("doc_id")).distinct()
-        .withColumn("_mh", lit(true))
-      val ch = conn.read("chunk_index").select(col("doc_id")).distinct()
-        .withColumn("_ch", lit(true))
-      val fp = conn.read("fp_index").select(col("fp").as("_fp"))
-        .withColumn("_infp", lit(true))
-      docs.withColumn("_fp", TextFunctions.fingerprint(col("text")))
-        .join(rel, Seq("doc_id"), "left").join(mh, Seq("doc_id"), "left")
-        .join(ch, Seq("doc_id"), "left").join(fp, Seq("_fp"), "left")
-        .select(col("doc_id"), (col("doc_id") % 5 <= 2).as("removed"),
-          coalesce(col("_rel"), lit(false)).as("in_release"),
-          coalesce(col("_infp"), lit(false)).as("in_fp"),
-          coalesce(col("_mh"), lit(false)).as("in_mh"),
-          coalesce(col("_ch"), lit(false)).as("in_chunk"))
-        .orderBy(col("doc_id"))
+      workspaceMembership(conn, docs,
+        col("doc_id"), (col("doc_id") % 5 <= 2).as("removed"))
     }),
 
     "q_maintenance_tick" -> ((s, dir) => {
@@ -3400,14 +3367,7 @@ object SparkEntry {
         .select(col("e.i").as("doc_id"), col("e.t").as("text"))
       // one scan for the 4 workspace writes + takedown feed + readback (r19)
       val docs = filler.unionByName(trio).localCheckpoint(true)
-      val work = java.nio.file.Files.createTempDirectory("graft_mainq_")
-        .toString
-      val conn = new sources.ParquetConnector(s, work)
-      conn.write(docs, "release_current")
-      conn.write(operators.Dedup.fingerprintIndex(docs, "text"), "fp_index")
-      conn.write(operators.Dedup.minhashIndex(docs, "text", "doc_id",
-        maxBucketSize = 2), "mh_index")
-      conn.write(operators.Dedup.chunkIndex(docs, "text", "doc_id"), "chunk_index")
+      val (work, conn) = seedWorkspace(s, "graft_mainq_", docs, maxBucketSize = 2)
       val preMh = conn.read("mh_index").select(col("_id").as("doc_id")).distinct()
         .withColumn("_pre", lit(true)).localCheckpoint(true)
       val tplan = new plans.Plan(s, plans.PlanConfig(pidDir = work + "/pid"))
@@ -3418,26 +3378,10 @@ object SparkEntry {
       pipelines.TrainingDataPipeline.maintenanceTick(mplan, work,
         maxBucketSize = 2)
       mplan.run()
-      val rel = conn.read("release_current").select(col("doc_id"))
-        .withColumn("_rel", lit(true))
-      val mh = conn.read("mh_index").select(col("_id").as("doc_id")).distinct()
-        .withColumn("_mh", lit(true))
-      val ch = conn.read("chunk_index").select(col("doc_id")).distinct()
-        .withColumn("_ch", lit(true))
-      val fp = conn.read("fp_index").select(col("fp").as("_fp"))
-        .withColumn("_infp", lit(true))
-      docs.filter(col("doc_id") >= 0)
-        .withColumn("_fp", TextFunctions.fingerprint(col("text")))
-        .join(preMh, Seq("doc_id"), "left")
-        .join(rel, Seq("doc_id"), "left").join(mh, Seq("doc_id"), "left")
-        .join(ch, Seq("doc_id"), "left").join(fp, Seq("_fp"), "left")
-        .select(col("doc_id"), (col("doc_id") % 62 === 0).as("recapped"),
-          coalesce(col("_pre"), lit(false)).as("was_in_mh"),
-          coalesce(col("_rel"), lit(false)).as("in_release"),
-          coalesce(col("_infp"), lit(false)).as("in_fp"),
-          coalesce(col("_mh"), lit(false)).as("in_mh"),
-          coalesce(col("_ch"), lit(false)).as("in_chunk"))
-        .orderBy(col("doc_id"))
+      workspaceMembership(conn,
+        docs.filter(col("doc_id") >= 0).join(preMh, Seq("doc_id"), "left"),
+        col("doc_id"), (col("doc_id") % 62 === 0).as("recapped"),
+        coalesce(col("_pre"), lit(false)).as("was_in_mh"))
     }),
 
     "q_content_chunks" -> ((s, dir) =>

@@ -99,24 +99,36 @@ object Dedup {
 
   /** Index-maintaining form: dedup `delta` against the fingerprint
     * index persisted as `indexTable` in `conn` (created on first tick),
-    * then append the survivors' fingerprints. Re-running the same delta
-    * is a no-op (its fingerprints are in the index) — replay-idempotent
+    * then append the survivors' fingerprints — absent from the index and
+    * one per fingerprint by construction. Re-running the same delta is
+    * a no-op (its fingerprints are in the index) — replay-idempotent
     * like the incremental pipes. Returns the surviving rows. */
   def incrementalExact(delta: DataFrame, textCol: String, idCol: String,
-                       conn: graft.sources.Connector, indexTable: String): DataFrame = {
-    val empty = !conn.tables.contains(indexTable)
-    val index =
-      if (empty) delta.sparkSession.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("fp",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      else conn.read(indexTable)
-    // sever lineage BEFORE rewriting the index the join reads — a lazy
-    // result re-evaluated after the write would see its own fingerprints
-    // and dedup itself to nothing
-    val kept = exactAgainst(delta, textCol, idCol, index).localCheckpoint(true)
-    conn.write(fingerprintIndex(kept, textCol).union(index).distinct(), indexTable)
+                       conn: graft.sources.Connector, indexTable: String): DataFrame =
+    incrementalIndex(conn, indexTable, _ => ())(
+      _.fold(exact(delta, textCol, idCol))(exactAgainst(delta, textCol, idCol, _)))(
+      (kept, _) => fingerprintIndex(kept, textCol))
+
+  /** The one index lifecycle behind [[incrementalExact]],
+    * [[incrementalMinhash]], [[incrementalEmbedding]] and
+    * [[incrementalChunks]]: (1) `dedup` the delta — in batch when
+    * `indexTable` is absent (None), else against its rows; (2)
+    * checkpoint the survivors, severing lineage BEFORE the index write
+    * (a lazy result re-evaluated after it would see its own index rows
+    * and dedup itself to nothing); (3) hand them to `sink` BEFORE the
+    * index learns the batch; (4) create the index from, or append,
+    * `indexRows(survivors, index)` — the survivors' rows the index does
+    * not hold yet. */
+  private def incrementalIndex(conn: graft.sources.Connector, indexTable: String,
+                               sink: DataFrame => Unit)(
+                               dedup: Option[DataFrame] => DataFrame)(
+                               indexRows: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame = {
+    val index = if (conn.tables.contains(indexTable)) Some(conn.read(indexTable)) else None
+    val kept = dedup(index).localCheckpoint(true)
+    sink(kept)
+    val rows = indexRows(kept, index)
+    if (index.isEmpty) conn.write(rows, indexTable)
+    else conn.write(rows, indexTable, org.apache.spark.sql.SaveMode.Append)
     kept
   }
 
@@ -171,6 +183,29 @@ object Dedup {
   def simhash(c: Column): Column =
     ColumnBridge.column(SimHashText(
       ColumnBridge.expression(TextFunctions.normalizeForFingerprint(c))))
+
+  /** Rows of `df` whose bucket (the `keys` value) holds at least
+    * `minSize` and at most `maxSize` rows (`maxSize <= 0`: no upper
+    * bound) — the one bucket cap of every index and pairing path.
+    * groupBy-count + semi-join, never a window, so a billion-row bucket
+    * never lands in one task. */
+  private def capBuckets(df: DataFrame, keys: Seq[String], maxSize: Int,
+                         minSize: Int = 1): DataFrame = {
+    val fits = (if (minSize > 1) Seq(col("_bc") >= minSize) else Nil) ++
+      (if (maxSize > 0) Seq(col("_bc") <= maxSize) else Nil)
+    if (fits.isEmpty) df
+    else df.join(df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_bc"))
+      .filter(fits.reduce(_ && _)).select(keys.map(col): _*), keys, "left_semi")
+  }
+
+  /** The fewest agreeing signature positions `k` with
+    * `k / numHashes >= threshold` (numHashes + 1 when none): the
+    * early-exit verdict equals the est_jaccard threshold test, since
+    * c / numHashes is exact for c ≤ 64 under the identical double
+    * comparison. */
+  private def minAgreement(numHashes: Int, threshold: Double): Int =
+    (0 to numHashes).find(k => k.toDouble / numHashes >= threshold)
+      .getOrElse(numHashes + 1)
 
   /** Generic join-free LSH candidate pairing: explode each row into
     * (bucketKey parts, payload), group by bucket, emit all in-bucket
@@ -266,13 +301,8 @@ object Dedup {
   def minhashIndex(df: DataFrame, textCol: String, idCol: String,
                    numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 3,
                    maxBucketSize: Int = 2000): DataFrame = {
-    val banded = bandedSignatures(df, textCol, idCol, numHashes, bands, shingleLen)
-    if (maxBucketSize <= 0) banded
-    else {
-      val ok = banded.groupBy("_band", "_bucket").agg(count(lit(1)).as("_bc"))
-        .filter(col("_bc") <= maxBucketSize)
-      banded.join(ok, Seq("_band", "_bucket"), "left_semi")
-    }
+    capBuckets(bandedSignatures(df, textCol, idCol, numHashes, bands, shingleLen),
+      Seq("_band", "_bucket"), maxBucketSize)
   }
 
   /** Incremental form of the periodic [[minhashIndex]] REBUILD over a
@@ -330,13 +360,7 @@ object Dedup {
     val keep = idx.join(coveredRel, Seq("_id"), "left_semi")
     val fresh = bandedSignatures(needDocs, textCol, idCol, numHashes, bands, shingleLen)
       .select(col("_id"), col("_sig"), col("_band"), col("_bucket"))
-    val all = keep.unionByName(fresh)
-    Some(if (maxBucketSize <= 0) all
-    else {
-      val ok = all.groupBy("_band", "_bucket").agg(count(lit(1)).as("_bc"))
-        .filter(col("_bc") <= maxBucketSize)
-      all.join(ok, Seq("_band", "_bucket"), "left_semi")
-    })
+    Some(capBuckets(keep.unionByName(fresh), Seq("_band", "_bucket"), maxBucketSize))
   }
 
   /** (id, sig, band, bucket) rows for LSH — shared by the batch and
@@ -409,15 +433,11 @@ object Dedup {
     // r19: the est_jaccard VALUE is discarded here — only membership in
     // the matched set matters — so the probe join verifies with the
     // early-exit boolean agreement test instead of scanning all
-    // numHashes positions per colliding pair. Same matched set by
-    // construction: est = c/numHashes ≥ t  ⟺  c ≥ the smallest integer
-    // k with k/numHashes ≥ t under the identical double comparison
-    // (c/numHashes is exact for c ≤ 64). Against a HOT index bucket
-    // (boilerplate, or the bench's deliberate near-twin fixture) this
-    // is the tick-publish hot loop.
-    val minAgree = (0 to numHashes)
-      .find(k => k.toDouble / numHashes >= threshold)
-      .getOrElse(numHashes + 1)
+    // numHashes positions per colliding pair (same matched set: see
+    // minAgreement). Against a HOT index bucket (boilerplate, or the
+    // bench's deliberate near-twin fixture) this is the tick-publish
+    // hot loop.
+    val minAgree = minAgreement(numHashes, threshold)
     // r20 (guide §1.2 — don't compute things twice): the within-delta
     // dedup of the corpus-unmatched survivors used to call
     // bandedSignatures AGAIN on the survivor subset — a second full
@@ -472,19 +492,11 @@ object Dedup {
                          conn: graft.sources.Connector, indexTable: String,
                          numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 3,
                          threshold: Double = 0.7, maxBucketSize: Int = 2000,
-                         sink: DataFrame => Unit = _ => ()): DataFrame = {
-    val empty = !conn.tables.contains(indexTable)
-    val kept =
-      (if (empty) minhashDedup(delta, textCol, idCol, numHashes, bands, shingleLen, threshold)
-       else minhashDedupAgainst(delta, textCol, idCol, conn.read(indexTable),
-         numHashes, bands, shingleLen, threshold))
-        .localCheckpoint(true) // sever lineage before the index write below
-    sink(kept) // survivors reach durable storage BEFORE the index append
-    val newBands = minhashIndex(kept, textCol, idCol, numHashes, bands, shingleLen, maxBucketSize)
-    if (empty) conn.write(newBands, indexTable)
-    else conn.write(newBands, indexTable, org.apache.spark.sql.SaveMode.Append)
-    kept
-  }
+                         sink: DataFrame => Unit = _ => ()): DataFrame =
+    incrementalIndex(conn, indexTable, sink)(
+      _.fold(minhashDedup(delta, textCol, idCol, numHashes, bands, shingleLen, threshold))(
+        minhashDedupAgainst(delta, textCol, idCol, _, numHashes, bands, shingleLen, threshold)))(
+      (kept, _) => minhashIndex(kept, textCol, idCol, numHashes, bands, shingleLen, maxBucketSize))
 
   /** MinHash-LSH dedup: drop every doc that is a candidate-duplicate of a
     * lower-id doc (transitive chains collapse to the min root greedily —
@@ -495,11 +507,9 @@ object Dedup {
     // r19: the loser set needs a VERDICT per in-bucket pair, not the
     // est_jaccard value — the early-exit boolean agreement filter
     // replaces the full-signature count + double division + filter
-    // (same pairs: see minhashDedupAgainst's minAgree equivalence), and
-    // losers = the pair's greater id, exactly minhashCandidates' id_b.
-    val minAgree = (0 to numHashes)
-      .find(k => k.toDouble / numHashes >= threshold)
-      .getOrElse(numHashes + 1)
+    // (same pairs: see minAgreement), and losers = the pair's greater
+    // id, exactly minhashCandidates' id_b.
+    val minAgree = minAgreement(numHashes, threshold)
     val banded = bandedSignatures(df, textCol, idCol, numHashes, bands, shingleLen)
     val losers = bucketPairs(banded, Seq("_band", "_bucket"), "_id", "_sig",
         maxBucketSize = 2000)
@@ -567,11 +577,7 @@ object Dedup {
                         maxBlockSize: Int = 10000): DataFrame = {
     val keyed = ensureParallel(df).select(col(idCol).as("_id"), blockCol.as("_block"),
       col(textCol).as("_text"))
-    val bounded = if (maxBlockSize <= 0) keyed else {
-      val counts = keyed.groupBy(col("_block")).agg(count(lit(1)).as("_bc"))
-      keyed.join(counts.filter(col("_bc") <= maxBlockSize).select(col("_block")),
-        Seq("_block"), "left_semi")
-    }
+    val bounded = capBuckets(keyed, Seq("_block"), maxBlockSize)
     // r19: native distinct-shingle + set-overlap expressions (same
     // values, codegen'd — see replayableMinhashPairs) in place of the
     // CodegenFallback transform/intersect/union lambda chain
@@ -974,15 +980,9 @@ object Dedup {
   def embeddingIndex(df: DataFrame, vecCol: String, idCol: String, dim: Int,
                      planes: Int = 16, seed: Long = 42L,
                      maxBucketSize: Int = 2000): DataFrame = {
-    val keyed = ensureParallel(df).select(
+    capBuckets(ensureParallel(df).select(
       VectorFunctions.hyperplaneBucket(col(vecCol), dim, planes, seed).as("_bucket"),
-      col(idCol).as("_id"), col(vecCol).as("_v"))
-    if (maxBucketSize <= 0) keyed
-    else {
-      val ok = keyed.groupBy("_bucket").agg(count(lit(1)).as("_bc"))
-        .filter(col("_bc") <= maxBucketSize)
-      keyed.join(ok.select("_bucket"), Seq("_bucket"), "left_semi")
-    }
+      col(idCol).as("_id"), col(vecCol).as("_v")), Seq("_bucket"), maxBucketSize)
   }
 
   /** Incremental embedding near-dup candidates: DELTA vectors vs an
@@ -1033,22 +1033,14 @@ object Dedup {
                            conn: graft.sources.Connector, indexTable: String,
                            dim: Int, planes: Int = 16, seed: Long = 42L,
                            threshold: Double = 0.95, maxBucketSize: Int = 2000,
-                           sink: DataFrame => Unit = _ => ()): DataFrame = {
-    val empty = !conn.tables.contains(indexTable)
-    val kept =
-      (if (empty) {
-        val losers = embeddingNearDup(delta, vecCol, idCol, dim, planes, threshold, maxBucketSize, seed)
-          .select(col("id_b").as(idCol)).distinct()
-        delta.join(losers, Seq(idCol), "left_anti")
-      } else embeddingDedupAgainst(delta, vecCol, idCol, conn.read(indexTable),
-        dim, planes, seed, threshold, maxBucketSize))
-        .localCheckpoint(true) // sever lineage before the index write below
-    sink(kept) // survivors reach durable storage BEFORE the index append
-    val newRows = embeddingIndex(kept, vecCol, idCol, dim, planes, seed, maxBucketSize)
-    if (empty) conn.write(newRows, indexTable)
-    else conn.write(newRows, indexTable, org.apache.spark.sql.SaveMode.Append)
-    kept
-  }
+                           sink: DataFrame => Unit = _ => ()): DataFrame =
+    incrementalIndex(conn, indexTable, sink)(_.fold(
+      delta.join(embeddingNearDup(delta, vecCol, idCol, dim, planes, threshold,
+          maxBucketSize, seed).select(col("id_b").as(idCol)).distinct(),
+        Seq(idCol), "left_anti"))(
+      embeddingDedupAgainst(delta, vecCol, idCol, _, dim, planes, seed, threshold,
+        maxBucketSize)))(
+      (kept, _) => embeddingIndex(kept, vecCol, idCol, dim, planes, seed, maxBucketSize))
 
   /** Multi-table embedding near-dup — the recall lever
     * [[embeddingNearDup]]'s doc points at, implemented: `tables`
@@ -1412,11 +1404,7 @@ object Dedup {
         struct(col("mass").cast("int").as("mass"),
           col("doc_words").cast("int").as("doc_words")).as("_p"))
       .localCheckpoint(true)
-    val pairingBuckets = mass.groupBy(col("_kb")).agg(count(lit(1)).as("_bc"))
-      .filter(col("_bc") >= 2 &&
-        (if (maxBucketSize > 0) col("_bc") <= maxBucketSize else lit(true)))
-      .select(col("_kb"))
-    bucketPairs(mass.join(pairingBuckets, Seq("_kb"), "left_semi"),
+    bucketPairs(capBuckets(mass, Seq("_kb"), maxBucketSize, minSize = 2),
         Seq("_kb"), idCol, "_p", maxBucketSize = 0)
       .select(least(col("ia"), col("ib")).as("id_a"),
         greatest(col("ia"), col("ib")).as("id_b"),
@@ -1505,18 +1493,13 @@ object Dedup {
         .withColumn("_src", lit(1)))
     // batch cap parity: for every touched digest the candidate rows ARE
     // the union corpus's bucket, so [2, maxBucketSize] here equals the
-    // batch pairing's bucket gate
-    val okSizes = candidates.groupBy(col("chunk_md5"))
-      .agg(count(lit(1)).as("_bc"))
-      .filter(col("_bc") >= 2 &&
-        (if (maxBucketSize > 0) col("_bc") <= maxBucketSize else lit(true)))
-      .select(col("chunk_md5"))
-    val other = candidates.join(okSizes, Seq("chunk_md5"), "left_semi")
+    // batch pairing's bucket gate; the probe side is the capped delta rows
+    val capped = capBuckets(candidates, Seq("chunk_md5"), maxBucketSize, minSize = 2)
+    val other = capped
       .withColumnsRenamed(Map(idCol -> "_oi", "mass" -> "_om", "doc_words" -> "_ow"))
-    val probe = deltaMass
+    val probe = capped.filter(col("_src") === 1)
       .select(col("chunk_md5"), col(idCol).as("_di"), col("mass").as("_dm"),
         col("doc_words").as("_dw"))
-      .join(okSizes, Seq("chunk_md5"), "left_semi")
     // each unordered pair once: a corpus partner always pairs from the
     // delta side; a delta-delta pair only from its smaller-id side
     probe.join(other, Seq("chunk_md5"))
@@ -1611,30 +1594,16 @@ object Dedup {
                         conn: graft.sources.Connector, indexTable: String,
                         thresholdFp: Long = 700000L, boundaryHex: Int = 2,
                         maxBucketSize: Int = 2000,
-                        sink: DataFrame => Unit = _ => ()): DataFrame = {
-    val empty = !conn.tables.contains(indexTable)
-    val pairs =
-      if (empty) chunkContainmentPairs(delta, textCol, idCol, thresholdFp,
-        boundaryHex, maxBucketSize)
-      else containmentAgainstIndex(delta, textCol, idCol, conn.read(indexTable),
-        thresholdFp, boundaryHex, maxBucketSize)
-    val deltaLosers = containmentLosers(pairs, thresholdFp)
-      .select(col("_loser").as(idCol))
-      .join(delta.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
-    val kept = delta.join(deltaLosers, Seq(idCol), "left_anti")
-      .localCheckpoint(true) // sever lineage before the index write below
-    sink(kept) // survivors reach durable storage BEFORE the index append
-    val newDocs =
-      if (empty) kept
-      else kept.join(conn.read(indexTable).select(col(idCol)).distinct(),
-        Seq(idCol), "left_anti")
-    // eager: the append below writes the very table this plan reads
-    val newRows = chunkIndex(newDocs, textCol, idCol, boundaryHex)
-      .localCheckpoint(true)
-    if (empty) conn.write(newRows, indexTable)
-    else conn.write(newRows, indexTable, org.apache.spark.sql.SaveMode.Append)
-    kept
-  }
+                        sink: DataFrame => Unit = _ => ()): DataFrame =
+    incrementalIndex(conn, indexTable, sink)(
+      _.fold(containmentDedup(delta, textCol, idCol, thresholdFp, boundaryHex, maxBucketSize))(
+        containmentDedupAgainst(delta, textCol, idCol, _, thresholdFp, boundaryHex,
+          maxBucketSize)))(
+      // a replayed batch keeps the same survivors, whose rows are indexed
+      // already; eager: the append writes the very table this plan reads
+      (kept, index) => chunkIndex(index.fold(kept)(i => kept.join(
+          i.select(col(idCol)).distinct(), Seq(idCol), "left_anti")), textCol, idCol, boundaryHex)
+        .localCheckpoint(true))
 
   /** Chunk-level duplication profile over [[contentDefinedChunks]]: per
     * document, how much of it is made of chunks that also appear in

@@ -90,23 +90,9 @@ object Layout {
   def compactSmallFiles(spark: org.apache.spark.sql.SparkSession, path: String,
                         targetFileBytes: Long = 128L << 20): (Int, Int) = {
     require(targetFileBytes > 0L, s"targetFileBytes must be positive, got $targetFileBytes")
-    import org.apache.hadoop.fs.{Path => HPath}
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new HPath(path)
-    val fs = p.getFileSystem(conf)
-    val dataFiles = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.LocatedFileStatus]()
-      while (it.hasNext) {
-        val s = it.next()
-        val n = s.getPath.getName
-        if (s.isFile && n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_"))
-          buf += s
-      }
-      buf.toSeq
-    }
+    val dataFiles = graft.sources.FileTableOps.dataFiles(java.nio.file.Paths.get(path))
     require(dataFiles.nonEmpty, s"compactSmallFiles: no data files under $path")
-    val totalBytes = dataFiles.map(_.getLen).sum
+    val totalBytes = dataFiles.map(java.nio.file.Files.size).sum
     val target = math.max(1L, (totalBytes + targetFileBytes - 1L) / targetFileBytes).toInt
     // r19: already-compact tables no-op — a maintenance tick over a
     // mostly-settled workdir must not pay a full rewrite of every table

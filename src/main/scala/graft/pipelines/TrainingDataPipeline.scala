@@ -2,7 +2,6 @@ package graft.pipelines
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Dedup, LanguageModel}
 import graft.plans.{Plan, Reporter}
@@ -568,18 +567,16 @@ object TrainingDataPipeline {
     *                      decodes just those (a 1 % delta decodes 1 %
     *                      of the crawl) → `delta_documents` →
     *   `tick_filter`    — quality + language gate → `delta_clean` →
-    *   `tick_publish`   — probe the PERSISTED dedup indexes: exact
-    *                      fingerprints ([[graft.operators.Dedup.exactAgainst]]
-    *                      vs `fp_index`), the banded MinHash sketch
-    *                      ([[graft.operators.Dedup.minhashDedupAgainst]]
-    *                      vs `mh_index`), and — with `containment` on —
-    *                      the CDC chunk index (partial-copy spam:
-    *                      [[graft.operators.Dedup.containmentDedupAgainst]]
-    *                      vs `chunk_index`); survivors →
+    *   `tick_publish`   — probe the PERSISTED dedup indexes of
+    *                      [[WorkspaceIndex.all]] in list order: exact
+    *                      fingerprints (`fp_index`), the banded MinHash
+    *                      sketch (`mh_index`), and the CDC chunk index
+    *                      (`chunk_index`, partial-copy spam — on the
+    *                      list only with `containment` on); survivors →
     *                      `delta_release`, then an IDEMPOTENT append
     *                      (anti-join on `doc_id`) into
-    *                      `release_current`, and ONLY THEN the index
-    *                      appends →
+    *                      `release_current`, and ONLY THEN one heal
+    *                      leg per listed index →
     *   `tick_promote`   — rotate `cdx_current` → `cdx_previous`,
     *                      promote `cdx_candidate`.
     *
@@ -598,8 +595,13 @@ object TrainingDataPipeline {
     * union+distinct rewrite of it), so the publish leg's shuffle and
     * write volume track the DELTA, not the corpus index.
     *
-    * CRASH ORDERING (the [[graft.operators.Dedup.incrementalMinhash]]
-    * contract, stretched across steps): the release append is the
+    * Every per-index decision — table, watermark, natural key, legacy
+    * presence ids, probe, release-row → index-row function — comes from
+    * the [[WorkspaceIndex]] entry; the tick itself knows no index key.
+    *
+    * CRASH ORDERING (the lifecycle contract of the
+    * [[graft.operators.Dedup]] `incremental*` forms, stretched across
+    * steps): the release append is the
     * durable sink and runs BEFORE any index learns the batch; the
     * append itself is idempotent by `doc_id` (the stable (path, record)
     * hash), so a replay after a crash in ANY window — before the
@@ -641,7 +643,7 @@ object TrainingDataPipeline {
       s"extractor must be 'strip' or 'main', got '$extractor'")
     val spark = plan.spark
     val work = new ParquetConnector(spark, workDir)
-    import graft.operators.{Dedup, Robots, Warc}
+    import graft.operators.{Robots, Warc}
 
     plan.step("tick_cdx") {
       work.write(Warc.readWarcCdxDir(spark, newWarcDir), "cdx_candidate")
@@ -698,42 +700,22 @@ object TrainingDataPipeline {
 
     plan.step("tick_publish") {
       val clean = work.read("delta_clean")
-      val hasFp = work.tables.contains("fp_index")
+      val indexes = WorkspaceIndex.all(numHashes, bands, shingleLen, maxBucketSize,
+        minhashThreshold, containmentThresholdFp)
+        .filter(ix => containment || ix.name != "chunk")
       // each persisted index is READ ONCE per tick (r20): a work.read
       // costs a file-listing/schema pass once a table has accumulated
       // per-tick appended files, and the probe and heal legs used to
-      // re-read each index 2-3x per tick. The mutable slots exist only
-      // for the one-time _gen migration below, which rewrites a
+      // re-read each index 2-3x per tick. The map is mutable only for
+      // the one-time _gen migration below, which rewrites a
       // pre-generation table and must refresh its view.
-      var fpIdxDf: Option[DataFrame] = if (hasFp) Some(work.read("fp_index")) else None
-      var mhIdxDf: Option[DataFrame] =
-        if (work.tables.contains("mh_index")) Some(work.read("mh_index")) else None
-      var chunkIdxDf: Option[DataFrame] =
-        if (work.tables.contains("chunk_index")) Some(work.read("chunk_index")) else None
-      val fpIdx = fpIdxDf.getOrElse(
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("fp",
-              org.apache.spark.sql.types.LongType, nullable = false)))))
-      val exactKept = Dedup.exactAgainst(clean, "text", "doc_id", fpIdx)
-      val mhKept = mhIdxDf match {
-        case Some(mhIdx) => Dedup.minhashDedupAgainst(exactKept, "text", "doc_id",
-          mhIdx, numHashes, bands, shingleLen, minhashThreshold)
-        case None => Dedup.minhashDedup(exactKept, "text", "doc_id",
-          numHashes, bands, shingleLen, minhashThreshold)
-      }
-      // optional third gate (VERDICT r17 #5): partial-copy spam — a
-      // delta doc that mostly QUOTES released content slips past both
-      // the fingerprint (not exact) and the sketch (low Jaccard when
-      // the wrapper is large) but lights up the persisted CDC chunk
-      // index; an empty index degrades to within-delta pairing
-      val kept =
-        (if (!containment) mhKept
-         else Dedup.containmentDedupAgainst(mhKept, "text", "doc_id",
-           chunkIdxDf.getOrElse(Dedup.chunkIndex(clean.limit(0), "text", "doc_id")),
-           containmentThresholdFp, maxBucketSize = maxBucketSize))
-          .localCheckpoint(true) // sever lineage before every write below
+      val views = scala.collection.mutable.Map[String, DataFrame]()
+      indexes.filter(ix => work.tables.contains(ix.table))
+        .foreach(ix => views(ix.table) = work.read(ix.table))
+      // the gates run in list order, each over the previous survivors;
+      // an absent index degrades to within-delta dedup
+      val kept = indexes.foldLeft(clean)((d, ix) => ix.probe(d, views.get(ix.table)))
+        .localCheckpoint(true) // sever lineage before every write below
       work.write(kept, "delta_release")
 
       // ---- durable release append, rows stamped with this tick's
@@ -742,24 +724,16 @@ object TrainingDataPipeline {
       // (release and each index pay one full rewrite, once); its
       // watermarks are then established by the legacy id-presence heal
       // below, and every later tick prunes by generation.
-      for (t <- Seq("release_current", "fp_index", "mh_index", "chunk_index")) {
-        val cur = t match {
-          case "fp_index" => fpIdxDf
-          case "mh_index" => mhIdxDf
-          case "chunk_index" => chunkIdxDf
-          case _ => if (work.tables.contains(t)) Some(work.read(t)) else None
+      def migrate(t: String, cur: DataFrame): Option[DataFrame] =
+        if (cur.columns.contains("_gen")) None
+        else {
+          work.write(cur.withColumn("_gen", lit(0L)), t)
+          Some(work.read(t)) // the rewrite invalidated the view
         }
-        cur.filterNot(_.columns.contains("_gen")).foreach { df0 =>
-          work.write(df0.withColumn("_gen", lit(0L)), t)
-          val fresh = Some(work.read(t)) // the rewrite invalidated the view
-          t match {
-            case "fp_index" => fpIdxDf = fresh
-            case "mh_index" => mhIdxDf = fresh
-            case "chunk_index" => chunkIdxDf = fresh
-            case _ => ()
-          }
-        }
-      }
+      if (work.tables.contains("release_current"))
+        migrate("release_current", work.read("release_current"))
+      for (ix <- indexes; cur <- views.get(ix.table); fresh <- migrate(ix.table, cur))
+        views(ix.table) = fresh
       val st0 = GenState.read(work)
       val relGen0 = st0.getOrElse("release",
         if (work.tables.contains("release_current")) 0L else -1L)
@@ -827,104 +801,59 @@ object TrainingDataPipeline {
       lazy val rel = if (createdThisTick) newRows.get else work.read("release_current")
       // fused suspect-window scan (VERDICT r19 #1): in steady state
       // every index watermark sits at the previous generation, so the
-      // fp/mh/chunk heal legs share ONE materialized delta — exactly
-      // the rows this step just appended — instead of three gen-pruned
-      // release scans plus a per-leg checkpoint. A replay with diverged
-      // watermarks falls back to one checkpointed scan per DISTINCT
-      // watermark. Equivalence: rows with `_gen > relGen0` are exactly
-      // generation g's rows (no row can carry a generation above the
-      // declared release generation, and g = relGen0 + 1), i.e. the
+      // heal legs share ONE materialized delta — exactly the rows this
+      // step just appended — instead of one gen-pruned release scan
+      // plus a checkpoint per leg. A replay with diverged watermarks
+      // falls back to one checkpointed scan per DISTINCT watermark.
+      // Equivalence: rows with `_gen > relGen0` are exactly generation
+      // g's rows (no row can carry a generation above the declared
+      // release generation, and g = relGen0 + 1), i.e. the
       // `novel`/first-write frame.
       val candByWm = scala.collection.mutable.HashMap[Long, DataFrame]()
       def genCand(w: Long): DataFrame = candByWm.getOrElseUpdate(w,
         if (w == relGen0 && relGen == g && newRows.isDefined) newRows.get
         else rel.filter(col("_gen") > w).localCheckpoint(true))
-      def needing(wm: Option[Long], legacyIds: => DataFrame,
-                  ckptLegacy: Boolean): DataFrame = wm match {
-        case Some(w) => genCand(w)
-        case None =>
-          val missing = rel.select(col("doc_id"))
-            .join(legacyIds, Seq("doc_id"), "left_anti")
-          val cand = rel.join(missing, Seq("doc_id"), "left_semi")
-          if (ckptLegacy) cand.localCheckpoint(true) else cand
+      // legacy heal: released docs whose id the presence table lacks —
+      // also the first-enable BACKFILL of an index that has no table
+      // yet (turning containment on indexes every released doc once, a
+      // one-time O(release-text) pass)
+      def unindexed(ix: WorkspaceIndex): DataFrame = {
+        val (t, idCol) = ix.presence
+        val ids = views.get(t).fold(clean.select(col("doc_id")).limit(0))(
+          _.select(col(idCol).as("doc_id")).distinct())
+        val missing = rel.select(col("doc_id")).join(ids, Seq("doc_id"), "left_anti")
+        rel.join(missing, Seq("doc_id"), "left_semi").localCheckpoint(true)
       }
-      def mhIds = mhIdxDf match {
-        case Some(mhIdx) => mhIdx.select(col("_id").as("doc_id")).distinct()
-        case None => clean.select(col("doc_id")).limit(0)
-      }
-      // fp append runs BEFORE the mh append; the legacy fp heal is
-      // keyed on mh ids, so the fp top-up covers every reachable
-      // pre-watermark crash window (VERDICT r17 #1 lineage).
-      val wmFp = if (fpIdxDf.isDefined) st0.get("wm_fp") else None
-      if (!wmFp.exists(_ >= relGen)) {
-        // single consumer — the legacy form stays lazy (the fpRows
-        // anti-join below checkpoints the leg's output)
-        val candFp = needing(wmFp, mhIds, ckptLegacy = false)
-        val fpRows = candFp.select(
-          graft.functions.TextFunctions.fingerprint(col("text")).as("fp"),
-          col("_gen"))
-        val fpAppend = ((wmFp, fpIdxDf) match {
-          case (Some(w), Some(fpi)) => fpRows.join(
-            fpi.filter(col("_gen") > w).select(col("fp")),
-            Seq("fp"), "left_anti")
-          case (None, Some(fpi)) => fpRows.join(
-            fpi.select(col("fp")), Seq("fp"), "left_anti")
-          case _ => fpRows
-        }).localCheckpoint(true)
-        if (fpIdxDf.isDefined)
-          work.write(fpAppend, "fp_index", org.apache.spark.sql.SaveMode.Append)
-        else work.write(fpAppend, "fp_index")
-      }
-      val wmMh = if (mhIdxDf.isDefined) st0.get("wm_mh") else None
-      if (!wmMh.exists(_ >= relGen)) {
-        val candMh = needing(wmMh, mhIds, ckptLegacy = true)
-        val newBands = Dedup.minhashIndex(candMh, "text", "doc_id",
-            numHashes, bands, shingleLen, maxBucketSize)
-          .join(candMh.select(col("doc_id").as("_id"), col("_gen")), Seq("_id"))
-        val mhAppend = ((wmMh, mhIdxDf) match {
-          case (Some(w), Some(mhIdx)) => newBands.join(
-            mhIdx.filter(col("_gen") > w)
-              .select(col("_id"), col("_band")),
-            Seq("_id", "_band"), "left_anti")
-          case _ => newBands // legacy candidates are id-absent already
-        }).localCheckpoint(true)
-        if (mhIdxDf.isDefined)
-          work.write(mhAppend, "mh_index", org.apache.spark.sql.SaveMode.Append)
-        else work.write(mhAppend, "mh_index")
-      }
-      if (containment) {
-        // watermark doubles as first-enable BACKFILL: turning the gate
-        // on finds no wm_chunk, so the legacy heal indexes every
-        // released doc once — a one-time O(release-text) pass; turning
-        // it OFF and back on later replays only the missed generations
-        // (the watermark kept counting while the gate was off).
-        val wmCh = if (chunkIdxDf.isDefined) st0.get("wm_chunk") else None
-        if (!wmCh.exists(_ >= relGen)) {
-          def chunkIds = chunkIdxDf match {
-            case Some(chIdx) => chIdx.select(col("doc_id")).distinct()
-            case None => clean.select(col("doc_id")).limit(0)
-          }
-          val candCh = needing(wmCh, chunkIds, ckptLegacy = true)
-          val newChunks = Dedup.chunkIndex(candCh.drop("_gen"), "text", "doc_id")
-            .join(candCh.select(col("doc_id"), col("_gen")), Seq("doc_id"))
-          val chAppend = ((wmCh, chunkIdxDf) match {
-            case (Some(w), Some(chIdx)) => newChunks.join(
-              chIdx.filter(col("_gen") > w)
-                .select(col("doc_id"), col("chunk_md5")),
-              Seq("doc_id", "chunk_md5"), "left_anti")
-            case _ => newChunks
+      // appends run in list order (fp BEFORE mh — the fp entry's
+      // presence contract), each index's rows landing durably before
+      // the next index's leg starts
+      for (ix <- indexes) {
+        val view = views.get(ix.table)
+        val wm = view.flatMap(_ => st0.get(ix.watermark))
+        if (!wm.exists(_ >= relGen)) {
+          val fresh = ix.rows(wm.fold(unindexed(ix))(genCand))
+          val keyCols = ix.key.map(col)
+          val append = ((wm, view) match {
+            case (Some(w), Some(v)) => fresh.join(
+              v.filter(col("_gen") > w).select(keyCols: _*), ix.key, "left_anti")
+            // legacy candidates keyed on the index's OWN ids are absent
+            // from it already; borrowed presence needs the full anti-join
+            case (None, Some(v)) if ix.presence._1 != ix.table =>
+              fresh.join(v.select(keyCols: _*), ix.key, "left_anti")
+            case _ => fresh
           }).localCheckpoint(true)
-          if (chunkIdxDf.isDefined)
-            work.write(chAppend, "chunk_index", org.apache.spark.sql.SaveMode.Append)
-          else work.write(chAppend, "chunk_index")
+          if (view.isDefined)
+            work.write(append, ix.table, org.apache.spark.sql.SaveMode.Append)
+          else work.write(append, ix.table)
         }
       }
       // watermarks advance LAST, and only to the generation whose index
       // rows are durably down: a crash anywhere above leaves them
       // stale, and the replay's suspect-window anti-joins converge to
-      // the same index with no duplicates and no lost rows.
-      val wmUpdates = Map("wm_fp" -> relGen, "wm_mh" -> relGen) ++
-        (if (containment) Map("wm_chunk" -> relGen) else Map.empty[String, Long])
+      // the same index with no duplicates and no lost rows. An index
+      // off the list (chunk with containment off) keeps its watermark,
+      // so turning the gate back on replays only the missed generations.
+      val wmUpdates = indexes.map(_.watermark -> relGen).toMap
       // state tracked in-process: st0 plus the release declaration this
       // step may have written above — re-reading the tiny table here
       // cost one more collect job per tick for the same map (r19)
@@ -963,9 +892,11 @@ object TrainingDataPipeline {
     *                    overwritten with fewer) →
     *   `take_release` — drop the pending docs from `release_current`
     *                    (the durable forget) →
-    *   `take_indexes` — only now may the indexes forget: anti-join
-    *                    `fp_index` on the staged fingerprints,
-    *                    `mh_index` / `chunk_index` on the staged ids →
+    *   `take_indexes` — only now may the indexes forget: every
+    *                    [[WorkspaceIndex]] present anti-joins the
+    *                    staged rows on its `retireBy` column (`fp_index`
+    *                    the staged fingerprints, `mh_index` /
+    *                    `chunk_index` the staged ids) →
     *   `take_clear`   — drop `takedown_pending`.
     *
     * CRASH ORDERING — the MIRROR of the ingest tick's sink-before-index
@@ -1015,9 +946,9 @@ object TrainingDataPipeline {
               "feed — a malformed takedown list must fail loudly, not " +
               "silently remove nothing")).isNull)
           .distinct()
-        val matched = work.read("release_current")
-          .join(rm, Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
+        val matched = WorkspaceIndex.keyed(work.read("release_current")
+            .join(rm, Seq("doc_id"), "left_semi"))
+          .select(col("doc_id"), col("fp"))
         val pending =
           (if (work.tables.contains("takedown_pending"))
              matched.unionByName(work.read("takedown_pending"))
@@ -1044,17 +975,11 @@ object TrainingDataPipeline {
     plan.step("take_indexes") {
       if (work.tables.contains("takedown_pending")) {
         val pending = work.read("takedown_pending").localCheckpoint(true)
-        if (work.tables.contains("fp_index"))
-          work.write(work.read("fp_index")
-            .join(pending.select(col("fp")), Seq("fp"), "left_anti"), "fp_index")
-        if (work.tables.contains("mh_index"))
-          work.write(work.read("mh_index")
-            .join(pending.select(col("doc_id").as("_id")), Seq("_id"),
-              "left_anti"), "mh_index")
-        if (work.tables.contains("chunk_index"))
-          work.write(work.read("chunk_index")
-            .join(pending.select(col("doc_id")), Seq("doc_id"), "left_anti"),
-            "chunk_index")
+        for (ix <- WorkspaceIndex.all() if work.tables.contains(ix.table)) {
+          val (from, to) = ix.retireBy
+          work.write(work.read(ix.table)
+            .join(pending.select(col(from).as(to)), Seq(to), "left_anti"), ix.table)
+        }
       }
     }
 
@@ -1086,7 +1011,8 @@ object TrainingDataPipeline {
     *                        release generation and `wm_mh` set to it
     *                        (empty suspect window).
     *   `maint_compact`    — [[graft.operators.Layout.compactSmallFiles]]
-    *                        over `release_current`, the three indexes,
+    *                        over `release_current`, every
+    *                        [[WorkspaceIndex]],
     *                        and the `revocations` audit:
     *                        ⌈bytes / targetFileBytes⌉ files replace the
     *                        per-tick fragments. Shuffle-free (the scan
@@ -1140,26 +1066,15 @@ object TrainingDataPipeline {
     }
 
     plan.step("maint_compact") {
-      Seq("release_current", "fp_index", "mh_index", "chunk_index", "revocations")
+      (("release_current" +: WorkspaceIndex.all().map(_.table)) :+ "revocations")
         // data-file presence is a DRIVER-side listing (r20): the old
         // `count(t) > 0` guard cost one Spark job per table per tick and
         // only existed to keep compactSmallFiles from throwing on a
         // zero-data-file dir (an empty-frame write leaves none)
-        .filter { t =>
-          work.tables.contains(t) && {
-            val dir = java.nio.file.Paths.get(workDir, t + ".parquet")
-            val s = java.nio.file.Files.list(dir)
-            try s.iterator().asScala.exists { f =>
-              val n = f.getFileName.toString
-              n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-            } finally s.close()
-          }
-        }
+        .filter(t => graft.sources.FileTableOps.dataFiles(work.tablePath(t)).nonEmpty)
         .foreach { t =>
           val (before, after) = graft.operators.Layout.compactSmallFiles(
-            plan.spark,
-            java.nio.file.Paths.get(workDir, t + ".parquet").toString,
-            targetFileBytes)
+            plan.spark, work.tablePath(t).toString, targetFileBytes)
           plan.logger.info(s"maintenance: $t compacted $before -> $after files")
         }
     }
@@ -1360,20 +1275,8 @@ object TrainingDataPipeline {
       if (!work.tables.contains(Table)) Map.empty
       else {
         val conf = work.spark.sessionState.newHadoopConf()
-        val dir = work.tablePath(Table)
-        val files = {
-          val s = java.nio.file.Files.list(dir)
-          try {
-            val b = Seq.newBuilder[java.nio.file.Path]; val it = s.iterator()
-            while (it.hasNext) {
-              val f = it.next(); val n = f.getFileName.toString
-              if (n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")) b += f
-            }
-            b.result()
-          } finally s.close()
-        }
         val out = Map.newBuilder[String, Long]
-        files.foreach { f =>
+        graft.sources.FileTableOps.dataFiles(work.tablePath(Table)).foreach { f =>
           val reader = org.apache.parquet.hadoop.ParquetReader.builder(
             new org.apache.parquet.hadoop.example.GroupReadSupport(),
             new org.apache.hadoop.fs.Path(f.toString)).withConf(conf).build()

@@ -39,6 +39,24 @@ object FileTableOps {
     Files.deleteIfExists(p)
   }
 
+  /** A parquet table's data files: every `.parquet` file under `table`,
+    * recursively (partitioned layouts nest them), skipping hidden and
+    * metadata files (`.`/`_` prefixed). Empty when `table` is no
+    * directory. */
+  def dataFiles(table: Path): Seq[Path] = {
+    if (!Files.isDirectory(table)) return Seq.empty
+    val s = Files.walk(table)
+    try {
+      val b = Seq.newBuilder[Path]; val it = s.iterator()
+      while (it.hasNext) {
+        val f = it.next(); val n = f.getFileName.toString
+        if (n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_") &&
+            Files.isRegularFile(f)) b += f
+      }
+      b.result()
+    } finally s.close()
+  }
+
   /** Table names in `dir` with the given extension, skipping tmp files. */
   def list(dir: String, ext: String): Seq[String] = {
     val d = Paths.get(dir)

@@ -161,18 +161,10 @@ class ParquetConnector(val spark: SparkSession, protected val dir: String) exten
     val tmp = Paths.get(dir, s".tmp_${table}_${System.nanoTime()}")
     df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val dst = path(table)
-    val s = Files.list(tmp)
-    try {
-      val it = s.iterator()
-      while (it.hasNext) {
-        val f = it.next()
-        val n = f.getFileName.toString
-        // only data files; spark part-file names carry a UUID so they
-        // cannot collide with existing files in the table dir
-        if (n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_"))
-          Files.move(f, dst.resolve(n), StandardCopyOption.ATOMIC_MOVE)
-      }
-    } finally s.close()
+    // only data files; spark part-file names carry a UUID so they
+    // cannot collide with existing files in the table dir
+    FileTableOps.dataFiles(tmp).foreach(f =>
+      Files.move(f, dst.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE))
     FileTableOps.deleteRecursively(tmp)
   }
 

@@ -59,10 +59,11 @@ class CrawlTickJourneySpec extends SparkSpec {
 
   private def uri(i: Int) = s"http://example.org/p/$i"
 
-  test("two crawl generations: delta-only funnel, index probes, idempotent release, " +
-    "crash-replay convergence") {
-    val gen0Dir = tmpDir("graft_tick_gen0_")
-    val gen1Dir = tmpDir("graft_tick_gen1_")
+  /** The two-generation crawl fixture the journey and heal specs share,
+    * written under `prefix`-named temp dirs; returns (gen0Dir, gen1Dir). */
+  private def twoGenerations(prefix: String): (String, String) = {
+    val gen0Dir = tmpDir(s"${prefix}gen0_")
+    val gen1Dir = tmpDir(s"${prefix}gen1_")
     // gen 0: pages 0-11 across two files (one gzipped) + a latin page
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$gen0Dir/a.warc"),
       warcFile((0 until 6).map(i => response(uri(i), pages(i))) :+
@@ -82,7 +83,12 @@ class CrawlTickJourneySpec extends SparkSpec {
         response(uri(12), pages(13)),
         response(uri(13), pages(3)),
         response(uri(14), pages(4) + " again and again")))))
+    (gen0Dir, gen1Dir)
+  }
 
+  test("two crawl generations: delta-only funnel, index probes, idempotent release, " +
+    "crash-replay convergence") {
+    val (gen0Dir, gen1Dir) = twoGenerations("graft_tick_")
     val workDir = tmpDir("graft_tick_work_")
     def tick(dir: String): Unit = {
       val plan = new Plan(spark, PlanConfig(pidDir = tmpDir("graft_tick_pid_")))
@@ -275,6 +281,145 @@ class CrawlTickJourneySpec extends SparkSpec {
     // and NO release re-scan for any index
     tick(gen1Dir)
     assert(state == st, "a steady tick must not move generations or watermarks")
+  }
+
+  // ── heal paths, one per persisted index: the tick-5 crash window
+  // (index rows of one released doc lost, its watermark one generation
+  // stale, CDX not yet promoted) and the one-time pre-generation
+  // upgrade. The natural keys below are the on-disk contract, spelled
+  // out here on purpose: these specs pin the heal, not its code.
+
+  private def state(work: graft.sources.ParquetConnector): Map[String, Long] =
+    work.read("tick_state").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** Index rows a released doc owns: its fingerprint in `fp_index`, its
+    * id in the other two. */
+  private def rowsOf(work: graft.sources.ParquetConnector, table: String,
+                     docIds: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val idx = work.read(table)
+    table match {
+      case "fp_index" => idx.join(work.read("release_current")
+        .join(docIds, Seq("doc_id"), "left_semi")
+        .select(graft.functions.TextFunctions.fingerprint(col("text")).as("fp")),
+        Seq("fp"), "left_semi")
+      case "mh_index" => idx.join(docIds.select(col("doc_id").as("_id")), Seq("_id"), "left_semi")
+      case _ => idx.join(docIds, Seq("doc_id"), "left_semi")
+    }
+  }
+
+  private val naturalKey = Map("fp_index" -> Seq("fp"), "mh_index" -> Seq("_id", "_band"),
+    "chunk_index" -> Seq("doc_id", "chunk_md5"))
+
+  /** Every released doc owns index rows in `table`, and no natural key repeats. */
+  private def assertCovers(work: graft.sources.ParquetConnector, table: String): Unit = {
+    val rel = work.read("release_current").select(col("doc_id"))
+    val key = naturalKey(table)
+    // a key's first column names the doc (the release holds one doc per fingerprint)
+    val coveredDocs = rowsOf(work, table, rel).select(key.head).distinct().count()
+    val relDocs = rel.count()
+    assert(coveredDocs == relDocs, s"$table covers $coveredDocs of $relDocs released docs")
+    val idx = work.read(table)
+    assert(idx.count() == idx.select(key.map(col): _*).distinct().count(),
+      s"$table repeats a natural key ${key.mkString("(", ", ", ")")}")
+  }
+
+  private def crashWindowHeals(table: String, wmKey: String, containment: Boolean): Unit = {
+    val (gen0Dir, gen1Dir) = twoGenerations(s"graft_heal_${wmKey}_")
+    val workDir = tmpDir(s"graft_heal_${wmKey}_work_")
+    def tick(dir: String): Unit = {
+      val plan = new Plan(spark, PlanConfig(pidDir = tmpDir("graft_heal_pid_")))
+      TrainingDataPipeline.crawlTick(plan, dir, workDir,
+        minQuality = 0.0, langs = Seq("en"), minhashThreshold = 0.5,
+        containment = containment)
+      plan.run()
+    }
+    val work = new graft.sources.ParquetConnector(spark, workDir)
+    tick(gen0Dir); tick(gen1Dir)
+    val released = work.count("release_current")
+    val st = state(work)
+    assert(st(wmKey) == st("release"), st.toString)
+    // the crash window: the doc's index rows never landed, the index's
+    // watermark still names the previous generation, the CDX rotation
+    // did not happen
+    val wounded = work.read("release_current").filter(col("text").contains(pages(12)))
+      .select("doc_id").localCheckpoint(true)
+    val woundedId = wounded.collect().head.getLong(0)
+    val lost = rowsOf(work, table, wounded).count()
+    assert(lost > 0L)
+    val healthy = work.read(table).exceptAll(rowsOf(work, table, wounded)).localCheckpoint(true)
+    work.write(healthy, table)
+    val rolledBack = work.read("tick_state")
+      .withColumn("gen", when(col("name") === wmKey, col("gen") - 1).otherwise(col("gen")))
+      .localCheckpoint(true)
+    work.write(rolledBack, "tick_state")
+    assert(rowsOf(work, table, wounded).count() == 0L)
+    work.drop("cdx_current")
+    work.rename("cdx_previous", "cdx_current")
+    tick(gen1Dir)
+    assert(work.count("delta_release") == 0L)
+    assert(work.count("release_current") == released)
+    assert(rowsOf(work, table, wounded).count() == lost,
+      s"$table must top up exactly the rows doc $woundedId lost")
+    (Seq("fp_index", "mh_index") ++ (if (containment) Seq("chunk_index") else Nil))
+      .foreach(assertCovers(work, _))
+    assert(state(work) == st, "the replay must land the watermark back on the release")
+  }
+
+  test("crash window heal: fp_index rows lost with wm_fp one generation stale " +
+    "are topped up on replay") {
+    crashWindowHeals("fp_index", "wm_fp", containment = false)
+  }
+
+  test("crash window heal: chunk_index rows lost with wm_chunk one generation stale " +
+    "are topped up on replay (containment on)") {
+    crashWindowHeals("chunk_index", "wm_chunk", containment = true)
+  }
+
+  test("pre-generation workspace: the next tick stamps _gen everywhere, heals a doc " +
+    "missing from every index, and sets every watermark to the release generation") {
+    val (gen0Dir, gen1Dir) = twoGenerations("graft_pregen_")
+    // build a gen-0 release the normal way, then re-seed a fresh
+    // workspace from it the way the takedown queries seed theirs:
+    // release and the three indexes without `_gen`, no tick_state
+    val seedDir = tmpDir("graft_pregen_seed_")
+    val seedPlan = new Plan(spark, PlanConfig(pidDir = tmpDir("graft_pregen_pid_")))
+    TrainingDataPipeline.crawlTick(seedPlan, gen0Dir, seedDir,
+      minQuality = 0.0, langs = Seq("en"), minhashThreshold = 0.5)
+    seedPlan.run()
+    val seed = new graft.sources.ParquetConnector(spark, seedDir)
+    val workDir = tmpDir("graft_pregen_work_")
+    val work = new graft.sources.ParquetConnector(spark, workDir)
+    val rel = seed.read("release_current").drop("_gen").localCheckpoint(true)
+    // one released doc never reached any index (a pre-generation crash)
+    val stranded = rel.filter(col("text").contains(pages(5))).select("doc_id")
+      .collect().head.getLong(0)
+    val indexed = rel.filter(col("doc_id") =!= stranded)
+    work.write(rel, "release_current")
+    work.write(graft.operators.Dedup.fingerprintIndex(indexed, "text"), "fp_index")
+    work.write(graft.operators.Dedup.minhashIndex(indexed, "text", "doc_id"), "mh_index")
+    work.write(graft.operators.Dedup.chunkIndex(indexed, "text", "doc_id"), "chunk_index")
+    work.write(seed.read("cdx_current"), "cdx_current")
+    assert(!work.tables.contains("tick_state"))
+
+    val plan = new Plan(spark, PlanConfig(pidDir = tmpDir("graft_pregen_pid_")))
+    TrainingDataPipeline.crawlTick(plan, gen1Dir, workDir,
+      minQuality = 0.0, langs = Seq("en"), minhashThreshold = 0.5, containment = true)
+    plan.run()
+
+    assert(work.count("release_current") == 15L)
+    val st = state(work)
+    assert(st("release") == 1L, st.toString)
+    Seq("fp_index" -> "wm_fp", "mh_index" -> "wm_mh", "chunk_index" -> "wm_chunk")
+      .foreach { case (t, wm) =>
+        assertCovers(work, t)
+        assert(work.read(t).columns.contains("_gen") &&
+          work.read(t).filter(col("_gen").isNull).count() == 0L, s"$t rows lack _gen")
+        assert(st(wm) == st("release"), s"$wm = ${st.get(wm)}, release = ${st("release")}")
+      }
+    assert(work.read("release_current").filter(col("_gen").isNull).count() == 0L)
+    val strandedRows = rowsOf(work, "mh_index",
+      work.read("release_current").filter(col("doc_id") === stranded).select("doc_id"))
+    assert(strandedRows.count() > 0L, "the legacy id-presence heal must index the stranded doc")
   }
 
   test("langs = Nil disables the language gate (quality still applies)") {
