@@ -314,6 +314,30 @@ object Bench {
     if (ok.isEmpty) -1.0 else ok.sorted.apply(ok.size / 2)
   }
 
+  /** A median as the stdout line prints it: milliseconds, failures (-1.0)
+    * as they are. */
+  private[graft] def roundMs(v: Double): Double =
+    if (v < 0) v else math.round(v * 1000.0) / 1000.0
+
+  /** The bench `value`: the sum of the PRINTED (ms-rounded) medians, so
+    * it re-adds from the stdout line, skipping failed queries (median
+    * -1.0) instead of letting each subtract a second. */
+  private[graft] def benchValue(medians: Seq[Double]): Double =
+    roundMs(medians.map(roundMs).filter(_ >= 0).sum)
+
+  /** One runner pass over a query: every rep it took as (wall, cpu_util),
+    * the rep subset its median and spread flag use, and whether any rep
+    * threw. */
+  private[graft] final case class Pass(all: Seq[(Double, Double)], fin: Seq[Double],
+                                       threw: Boolean)
+
+  /** The pass a spread-flagged query commits after its quiet-window
+    * rerun: the rerun only when it has a median and is itself clean.
+    * `failed` lists a query iff its committed pass threw, so a rerun
+    * that throws and is discarded never marks the query failed. */
+  private[graft] def adopt(current: Pass, rerun: Pass): Pass =
+    if (median(rerun.fin) >= 0 && !spreadFlag(rerun.fin)) rerun else current
+
   /** Diagnostics go to a FILE, never stdout/stderr: the driver captures
     * both streams, and r10's artifact ended up with a stack trace mixed
     * into the JSON tail (VERDICT r10 #1). Stdout carries exactly one
@@ -592,11 +616,10 @@ object Bench {
     // measure the engine, not first-call JIT + classloading.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    // a rep that throws is recorded as -1.0 and its query lands in
-    // `failed` — NEVER timed as if it succeeded (r10: the catch sat
-    // inside the timed block, so a throwing query still contributed a
-    // plausible wall time and the only trace was an stderr line)
-    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    // a rep that throws is recorded as -1.0 and its pass as `threw` —
+    // NEVER timed as if it succeeded (r10: the catch sat inside the
+    // timed block, so a throwing query still contributed a plausible
+    // wall time and the only trace was an stderr line)
     val statPre = procStatTicks()
     // each rep carries (wall seconds, cpu_util in cores): util collapse
     // on an inflated rep is the steal evidence loadavg can't see
@@ -618,16 +641,16 @@ object Bench {
     // Every entry is a RUNNER so that a spread-flagged query can be
     // re-run in a later quiet window (VERDICT r19 #2b — one co-tenant
     // burst used to condemn the whole ~20-min run). A runner returns
-    // (all reps it took, the rep subset its median/flag should use —
-    // the post-warmup-requeue tail when that fired).
-    val headlineRunners: Seq[(String, () => (Seq[(Double, Double)], Seq[Double]))] =
+    // a Pass (its `fin` is the post-warmup-requeue tail when that fired).
+    val headlineRunners: Seq[(String, () => Pass)] =
       headline.filter(selected).map { name =>
       val fn = SparkEntry.queries(name)
-      def rep(): (Double, Double) =
-        try timedRep(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-        catch { case e: Throwable =>
-          diag(s"[bench] $name failed: ${e.getMessage}"); failed += name; (-1.0, -1.0) }
       name -> { () =>
+        var threw = false
+        def rep(): (Double, Double) =
+          try timedRep(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+          catch { case e: Throwable =>
+            diag(s"[bench] $name failed: ${e.getMessage}"); threw = true; (-1.0, -1.0) }
         val first = (1 to reps).map(_ => rep())
         val med = median(first.map(_._1))
         val extended =
@@ -639,8 +662,8 @@ object Bench {
         if (warmupFlag(extended.map(_._1))) {
           warmupRequeued += name
           val more = (1 to reps).map(_ => rep())
-          (extended ++ more, more.map(_._1))
-        } else (extended, extended.map(_._1))
+          Pass(extended ++ more, more.map(_._1), threw)
+        } else Pass(extended, extended.map(_._1), threw)
       }
     }
     val steadyRunners: Seq[(String, () => Seq[Double])] = Seq[(String, () => Seq[Double])](
@@ -666,28 +689,28 @@ object Bench {
       // r17: the incremental crawl loop's per-tick cost, indexes warm
       "q_crawl_tick_steady" -> (() => crawlTickSteady(spark, sfDir, reps))
     ).filter(e => selected(e._1))
-    val runners: Seq[(String, () => (Seq[(Double, Double)], Seq[Double]))] =
+    val runners: Seq[(String, () => Pass)] =
       headlineRunners ++ steadyRunners.map { case (name, thunk) =>
         name -> { () =>
           val c0 = procCpuNanos(); val t0 = System.nanoTime()
-          val times = try thunk()
+          val (times, threw) = try (thunk(), false)
             catch { case e: Throwable =>
-              diag(s"[bench] $name failed: ${e.getMessage}"); failed += name; Seq.fill(reps)(-1.0) }
+              diag(s"[bench] $name failed: ${e.getMessage}"); (Seq.fill(reps)(-1.0), true) }
           val wall = (System.nanoTime() - t0) / 1e9; val c1 = procCpuNanos()
           val util = if (c0 < 0 || c1 < 0 || wall <= 0) -1.0
                      else math.round((c1 - c0) / 1e9 / wall * 100.0) / 100.0
-          (times.map(t => (t, util)), times)
+          Pass(times.map(t => (t, util)), times, threw)
         }
       }
     val runsMap = scala.collection.mutable.LinkedHashMap[String, Seq[(Double, Double)]]()
-    // the rep subset each query's median and spread flag are computed
-    // from (the warmup-requeue tail when that fired; replaced wholesale
-    // by a clean quiet-window rerun below)
-    val finalTimes = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    // the pass each query commits: its median, spread flag and `failed`
+    // membership come from it (replaced wholesale by a clean
+    // quiet-window rerun below)
+    val committed = scala.collection.mutable.LinkedHashMap[String, Pass]()
     runners.foreach { case (name, r) =>
-      val (all, fin) = r()
-      runsMap(name) = all
-      finalTimes(name) = fin
+      val pass = r()
+      runsMap(name) = pass.all
+      committed(name) = pass
     }
     // per-query contamination requeue (VERDICT r19 #2b): a co-tenant
     // burst flags the queries it disturbed; instead of condemning the
@@ -695,7 +718,7 @@ object Bench {
     // The disturbed reps stay in `runs` as evidence; the committed
     // median adopts the rerun only when the rerun itself is clean.
     val spreadRequeued = scala.collection.mutable.LinkedHashSet[String]()
-    val flagged0 = finalTimes.collect { case (k, v) if spreadFlag(v) => k }.toSeq
+    val flagged0 = committed.collect { case (k, p) if spreadFlag(p.fin) => k }.toSeq
     if (flagged0.nonEmpty && !contaminated) {
       diag(s"[bench] spread-flagged ${flagged0.mkString(", ")}; requeueing in a quiet window")
       val runnerIdx = runners.toMap
@@ -703,11 +726,13 @@ object Bench {
       flagged0.foreach { name =>
         waitForIdle(maxLoad, maxWaits = 1, sleepSec = 30) // quick recheck
         spreadRequeued += name
-        val (extra, fin) = runnerIdx(name)()
-        runsMap(name) = runsMap(name) ++ extra
-        if (median(fin) >= 0 && !spreadFlag(fin)) finalTimes(name) = fin
+        val rerun = runnerIdx(name)()
+        runsMap(name) = runsMap(name) ++ rerun.all
+        committed(name) = adopt(committed(name), rerun)
       }
     }
+    val finalTimes = committed.map { case (k, p) => k -> p.fin }
+    val failed = committed.collect { case (k, p) if p.threw => k }
     val times = runsMap.toSeq.map { case (k, v) => k -> v.map(_._1) }
     val medians = finalTimes.toSeq.map { case (k, v) => k -> median(v) }
     val qs = medians.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -715,21 +740,17 @@ object Bench {
     // capture is byte-bounded and the full-precision line blew past it
     // (VERDICT r19 #1 — its r19 tail ends mid-JSON ~5.4 KB in). Full
     // precision stays in the file artifact.
-    val qsShort = medians.map { case (k, v) =>
-      "\"" + k + "\":" + (if (v < 0) v.toString else (math.round(v * 1000.0) / 1000.0).toString)
-    }.mkString("{", ",", "}")
+    val qsShort = medians.map { case (k, v) => "\"" + k + "\":" + roundMs(v) }
+      .mkString("{", ",", "}")
     val all = times.map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val utilJson = runsMap.toSeq.map { case (k, v) => "\"" + k + "\":" + v.map(_._2).mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val spreadFlagged = finalTimes.toSeq.collect { case (k, v) if spreadFlag(v) => k }
-    // `value` = total of medians over the timed set (headline + the
-    // steady-state tick entries), comparable round-over-round on the
-    // name intersection
-    val steadyNames = Set("q_part_tick_index", "q_part_tick_direct",
-      "q_pipe_tick", "q_part_pipe_tick",
-      "q_ewma_tick", "q_cusum_tick", "q_sess_tick", "q_crawl_tick_steady")
-    val total = medians.filter(m => headline.contains(m._1) || steadyNames.contains(m._1)).map(_._2).sum
+    // `value` = total of the printed medians over the timed set (headline
+    // + the steady-state tick entries), failures skipped — comparable
+    // round-over-round on the name intersection
+    val total = benchValue(medians.map(_._2))
     val postLoad = loadAvg()
     val statPost = procStatTicks()
     val (stealPct, sysPct) = (statPre, statPost) match {

@@ -15,10 +15,19 @@ import graft.functions.{MinHashSignature, MinHashTextSignature, SignatureAgreeme
   *  - MinHash/SimHash sketches are computed by native single-pass codegen
   *    expressions ([[graft.functions.SketchOps]]) — one tokenize+hash pass
   *    per row, not one per hash bit;
-  *  - candidate generation is join-free: band/chunk explode → groupBy →
-  *    in-bucket pair explode. One shuffle of (bucket, id, sketch) rows,
-  *    no self-join, no distinct over corpus-scale intermediates, no
-  *    persist barriers to babysit;
+  *  - every near-dup family (xxhash64 MinHash, md5 replayable MinHash,
+  *    SimHash/hamming chunks, hyperplane embedding tables, semantic
+  *    clusters) is sketch → band explode into a BANDED FRAME — one row
+  *    per (doc, bucket): `_id`, the payload its verify rule reads, the
+  *    bucket key columns — followed by one of three core operations:
+  *    [[pairs]] (in-bucket pair explode → (id_a, id_b, score) → keep →
+  *    distinct where a doc lands in several buckets), [[probe]] (delta
+  *    bands ⋈ a persisted index on the bucket key) and [[dedup]] (drop
+  *    the delta docs the probe verifies against the index, then the
+  *    greater id of each verified in-bucket pair of the rest);
+  *  - candidate generation is join-free: one shuffle of (bucket, id,
+  *    payload) rows into [[bucketPairs]], no self-join, no distinct over
+  *    corpus-scale intermediates, no persist barriers to babysit;
   *  - degenerate buckets (pathological near-identical content) are capped
   *    by `maxBucketSize` so no single task can go quadratic — the pairs
   *    such buckets would contribute are exact-dup shaped and belong to
@@ -216,16 +225,78 @@ object Dedup {
     * degenerate (near-identical content that exact dedup owns) and would
     * otherwise make one task quadratic. Returns one row per (pair,
     * bucket) occurrence — callers dedup AFTER the cheap pair-level
-    * filter. */
-  private def bucketPairs(exploded: DataFrame, bucketCols: Seq[String],
-                          idCol: String, payloadCol: String,
-                          maxBucketSize: Int): DataFrame = {
+    * filter. `maxBucketSize <= 0`: no upper bound. */
+  private[operators] def bucketPairs(exploded: DataFrame, bucketCols: Seq[String],
+                                     idCol: String, payloadCol: String,
+                                     maxBucketSize: Int): DataFrame = {
     val items = collect_list(struct(col(idCol).as("i"), col(payloadCol).as("p"))).as("items")
     val grouped = exploded.groupBy(bucketCols.map(col): _*).agg(items)
       .filter(size(col("items")) >= 2 &&
         (if (maxBucketSize > 0) size(col("items")) <= maxBucketSize else lit(true)))
     grouped.select(ColumnBridge.column(graft.functions.InBucketPairs(
       ColumnBridge.expression(col("items")))).as(Seq("ia", "ib", "pa", "pb")))
+  }
+
+  /** A banded frame: one row per (doc, bucket) — the doc's `_id`, the
+    * `payload` column its verify rule reads, and the `buckets` key
+    * columns. A persisted index of a family is its banded frame (bucket
+    * cap applied), so [[probe]] joins the two on the same names. */
+  private final case class Banded(df: DataFrame, buckets: Seq[String], payload: String)
+
+  /** The one pair tail: in-bucket pairs of `b` as (id_a = least,
+    * id_b = greatest, `score(pa, pb)`) kept where `keep` holds.
+    * `distinct` dedups a pair found in several buckets — callers pass it
+    * only when a doc lands in more than one (bands, tables, chunks); the
+    * score is a pure function of the pair, so the copies are equal. */
+  private def pairs(b: Banded, maxBucketSize: Int, distinct: Boolean)(
+                    score: (Column, Column) => Column, keep: Column): DataFrame = {
+    val out = bucketPairs(b.df, b.buckets, "_id", b.payload, maxBucketSize)
+      .select(least(col("ia"), col("ib")).as("id_a"),
+        greatest(col("ia"), col("ib")).as("id_b"), score(col("pa"), col("pb")))
+      .filter(keep)
+    if (distinct) out.distinct() else out
+  }
+
+  /** The one index probe: delta bands ⋈ `index` (the family's banded
+    * frame, persisted) on the bucket columns — one row per colliding
+    * (delta doc, corpus doc, bucket): `_did`, `_dp`, `_cid`, `_cp`
+    * (ids and payloads). Cost: O(delta × bands) probe rows; the corpus
+    * is touched only through its index.
+    *
+    * Join-strategy trade at 100 TB: for a typical daily tick the probe
+    * side is far under the broadcast threshold and AQE's runtime size
+    * estimate broadcasts it — the index is then scanned in place, never
+    * shuffled. For a BULK delta that exceeds broadcast size, the
+    * fallback shuffle join moves the index once (sketch-sized for
+    * MinHash, vector-sized for embeddings — quantize upstream when that
+    * matters). No explicit broadcast() hint on purpose: forcing it would
+    * OOM exactly on the bulk case the fallback exists for. */
+  private def probe(b: Banded, index: DataFrame): DataFrame =
+    b.df.withColumnsRenamed(Map("_id" -> "_did", b.payload -> "_dp"))
+      .join(index.withColumnsRenamed(Map("_id" -> "_cid", b.payload -> "_cp")), b.buckets)
+      .select(col("_did"), col("_dp"), col("_cid"), col("_cp"))
+
+  /** The one against-then-within dedup of the rows `delta` (keyed by
+    * `idCol`) over their banded frame `b`, `verdict(a, b)` being the
+    * boolean verify rule over two payloads: (1) the delta ids [[probe]]
+    * verifies against `index` (none when it is None); (2) over the SAME
+    * banded subtree minus those ids, the greater id of each verified
+    * in-bucket pair (greedy min-id policy; buckets over `maxBucketSize`
+    * pair nothing); (3) `delta` anti-joined with both sets. Banding is
+    * per-doc deterministic, so the remainder's bands are exactly `b`
+    * minus the matched ids — one subtree lets ReuseExchange compute the
+    * sketch once for the probe and the pairing. */
+  private def dedup(delta: DataFrame, idCol: String, b: Banded, index: Option[DataFrame],
+                    maxBucketSize: Int)(verdict: (Column, Column) => Column): DataFrame = {
+    val matched = index.map(probe(b, _).filter(verdict(col("_dp"), col("_cp")))
+      .select(col("_did").as(idCol)).distinct())
+    val rest = matched.fold(b)(m =>
+      b.copy(df = b.df.join(m.select(col(idCol).as("_id")), Seq("_id"), "left_anti")))
+    val losers = pairs(rest, maxBucketSize, distinct = false)(
+        (pa, pb) => verdict(pa, pb).as("_ok"), col("_ok"))
+      .select(col("id_b").as(idCol)).distinct()
+    matched.fold(delta)(delta.join(_, Seq(idCol), "left_anti"))
+      .join(losers, Seq(idCol), "left_anti")
   }
 
   /** MinHash+LSH candidate pairs: signature → `bands` bands of
@@ -243,9 +314,8 @@ object Dedup {
                         numHashes: Int = 64, bands: Int = 16,
                         shingleLen: Int = 3, threshold: Double = 0.7,
                         maxBucketSize: Int = 2000): DataFrame =
-    pairsFromBanded(
-      bandedSignatures(df, textCol, idCol, numHashes, bands, shingleLen),
-      numHashes, threshold, maxBucketSize)
+    pairs(bandedSignatures(df, textCol, idCol, numHashes, bands, shingleLen),
+      maxBucketSize, distinct = true)(estJaccard(numHashes), col("est_jaccard") >= threshold)
 
   /** Candidate pairing over a PRECOMPUTED signature column — the
     * band/bucket/pair/verify pipeline of [[minhashCandidates]] minus the
@@ -271,22 +341,21 @@ object Dedup {
         concat(lit(s"minhash signature length != $numHashes for id "),
           col("_id").cast("string"))).isNull)
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    pairsFromBanded(bandExplode(sig, numHashes, bands), numHashes, threshold, maxBucketSize)
+    pairs(bandExplode(sig, numHashes, bands), maxBucketSize, distinct = true)(
+      estJaccard(numHashes), col("est_jaccard") >= threshold)
   }
 
-  /** Shared tail of the batch candidate paths: in-bucket pair explode →
-    * exact signature agreement → threshold → distinct. */
-  private def pairsFromBanded(banded: DataFrame, numHashes: Int,
-                              threshold: Double, maxBucketSize: Int): DataFrame = {
-    val agreement = ColumnBridge.column(SignatureAgreement(
-      ColumnBridge.expression(col("pa")), ColumnBridge.expression(col("pb"))))
-    bucketPairs(banded, Seq("_band", "_bucket"), "_id", "_sig", maxBucketSize)
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"),
-        (agreement.cast("double") / numHashes).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-      .distinct() // same pair from multiple bands has identical est — safe
-  }
+  /** `est_jaccard`: the fraction of agreeing signature positions. */
+  private def estJaccard(numHashes: Int)(a: Column, b: Column): Column =
+    (ColumnBridge.column(SignatureAgreement(ColumnBridge.expression(a),
+      ColumnBridge.expression(b))).cast("double") / numHashes).as("est_jaccard")
+
+  /** The MinHash dedup verdict: at least `minAgree` agreeing signature
+    * positions ([[minAgreement]]) — an early-exit boolean where the
+    * dedups need no est_jaccard value (r19), same pairs. */
+  private def signaturesAgree(minAgree: Int)(a: Column, b: Column): Column =
+    ColumnBridge.column(graft.functions.SignatureAgreementAtLeast(
+      ColumnBridge.expression(a), ColumnBridge.expression(b), minAgree))
 
   /** Banded MinHash index of a corpus — the persisted side of
     * incremental NEAR-dup dedup ([[minhashAgainstIndex]]): one row per
@@ -301,7 +370,7 @@ object Dedup {
   def minhashIndex(df: DataFrame, textCol: String, idCol: String,
                    numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 3,
                    maxBucketSize: Int = 2000): DataFrame = {
-    capBuckets(bandedSignatures(df, textCol, idCol, numHashes, bands, shingleLen),
+    capBuckets(bandedSignatures(df, textCol, idCol, numHashes, bands, shingleLen).df,
       Seq("_band", "_bucket"), maxBucketSize)
   }
 
@@ -358,15 +427,15 @@ object Dedup {
       if (!anyStray && !anyOverCap) return None
     }
     val keep = idx.join(coveredRel, Seq("_id"), "left_semi")
-    val fresh = bandedSignatures(needDocs, textCol, idCol, numHashes, bands, shingleLen)
-      .select(col("_id"), col("_sig"), col("_band"), col("_bucket"))
+    val fresh = bandedSignatures(needDocs, textCol, idCol, numHashes, bands, shingleLen).df
     Some(capBuckets(keep.unionByName(fresh), Seq("_band", "_bucket"), maxBucketSize))
   }
 
-  /** (id, sig, band, bucket) rows for LSH — shared by the batch and
-    * index paths so their banding is bit-identical. */
+  /** The MinHash banded frame — (_id, _sig, _band, _bucket) rows —
+    * shared by the batch and index paths so their banding is
+    * bit-identical. */
   private def bandedSignatures(df: DataFrame, textCol: String, idCol: String,
-                               numHashes: Int, bands: Int, shingleLen: Int): DataFrame = {
+                               numHashes: Int, bands: Int, shingleLen: Int): Banded = {
     // BARRIER between signature compute and banding: without an exchange,
     // CollapseProject merges the signature projection into the banding
     // one, re-evaluating the (expensive) signature expression once PER
@@ -381,7 +450,7 @@ object Dedup {
 
   /** (id, sig) → one (band, bucket) row per band; bucket = xxhash64 of
     * the band's signature slice. */
-  private def bandExplode(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+  private def bandExplode(sig: DataFrame, numHashes: Int, bands: Int): Banded = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rowsPerBand = numHashes / bands
     // band hashes as a STATIC array of slice+xxhash64 columns — a
@@ -389,83 +458,39 @@ object Dedup {
     // banding projection to interpreted eval
     val bandHashes = array((0 until bands).map(b =>
       xxhash64(lit(b), slice(col("_sig"), b * rowsPerBand + 1, rowsPerBand))): _*)
-    sig.select(col("_id"), col("_sig"),
-      posexplode(bandHashes).as(Seq("_band", "_bucket")))
+    Banded(sig.select(col("_id"), col("_sig"),
+      posexplode(bandHashes).as(Seq("_band", "_bucket"))), Seq("_band", "_bucket"), "_sig")
   }
 
   /** Incremental near-dup candidates: DELTA docs vs an already-indexed
     * corpus ([[minhashIndex]], same parameters). The delta is banded the
-    * same way and equi-joined on (band, bucket); collisions verify by
-    * exact signature agreement. Cost: O(delta × bands) probe rows
-    * against an index equi-join — the corpus is touched only through
-    * its sketch index. Returns (deltaIdCol, corpusIdCol, est_jaccard)
-    * distinct pairs at `threshold`.
-    *
-    * Join-strategy trade at 100 TB: for a typical daily tick the probe
-    * side (delta × bands) is far under the broadcast threshold and
-    * AQE's runtime size estimate broadcasts it — the index is then
-    * scanned in place, never shuffled. For a BULK delta that exceeds
-    * broadcast size, the fallback shuffle join moves the sketch index
-    * once (index bytes ≈ 1-2% of corpus bytes — bounded, and the reason
-    * the index stores sketches, not text). No explicit broadcast() hint
-    * on purpose: forcing it would OOM exactly on the bulk case the
-    * fallback exists for. */
+    * same way and [[probe]]d on (band, bucket); collisions verify by
+    * exact signature agreement. Returns (delta_id, corpus_id,
+    * est_jaccard) distinct pairs at `threshold`. */
   def minhashAgainstIndex(delta: DataFrame, textCol: String, idCol: String,
                           index: DataFrame, numHashes: Int = 64, bands: Int = 16,
-                          shingleLen: Int = 3, threshold: Double = 0.7): DataFrame = {
-    val probes = bandedSignatures(delta, textCol, idCol, numHashes, bands, shingleLen)
-      .withColumnsRenamed(Map("_id" -> "_did", "_sig" -> "_dsig"))
-    val idx = index.withColumnsRenamed(Map("_id" -> "_cid", "_sig" -> "_csig"))
-    val agreement = ColumnBridge.column(SignatureAgreement(
-      ColumnBridge.expression(col("_dsig")), ColumnBridge.expression(col("_csig"))))
-    probes.join(idx, Seq("_band", "_bucket"))
+                          shingleLen: Int = 3, threshold: Double = 0.7): DataFrame =
+    probe(bandedSignatures(delta, textCol, idCol, numHashes, bands, shingleLen), index)
       .select(col("_did").as("delta_id"), col("_cid").as("corpus_id"),
-        (agreement.cast("double") / numHashes).as("est_jaccard"))
+        estJaccard(numHashes)(col("_dp"), col("_cp")))
       .filter(col("est_jaccard") >= threshold)
       .distinct()
-  }
 
   /** Incremental near-dup dedup tick: drop delta docs with a verified
-    * corpus match, then near-dedup the remainder within itself. */
+    * corpus match, then near-dedup the remainder within itself
+    * ([[dedup]] over one banded subtree — the signatures are computed
+    * once per tick, r20). The in-delta bucket cap is 2000. */
   def minhashDedupAgainst(delta: DataFrame, textCol: String, idCol: String,
                           index: DataFrame, numHashes: Int = 64, bands: Int = 16,
-                          shingleLen: Int = 3, threshold: Double = 0.7): DataFrame = {
-    // r19: the est_jaccard VALUE is discarded here — only membership in
-    // the matched set matters — so the probe join verifies with the
-    // early-exit boolean agreement test instead of scanning all
-    // numHashes positions per colliding pair (same matched set: see
-    // minAgreement). Against a HOT index bucket (boilerplate, or the
-    // bench's deliberate near-twin fixture) this is the tick-publish
-    // hot loop.
-    val minAgree = minAgreement(numHashes, threshold)
-    // r20 (guide §1.2 — don't compute things twice): the within-delta
-    // dedup of the corpus-unmatched survivors used to call
-    // bandedSignatures AGAIN on the survivor subset — a second full
-    // tokenize+shingle+64-hash pass over the delta text (plus its
-    // repartition barrier) per tick. Banding is per-doc deterministic,
-    // so the survivors' banded rows are exactly `banded` anti-joined on
-    // the matched ids; referencing ONE banded subtree lets ReuseExchange
-    // compute the signatures once for both the probe and the in-delta
-    // pairing. Same matched set, same loser set, same survivors.
-    val banded = bandedSignatures(delta, textCol, idCol, numHashes, bands, shingleLen)
-    val probes = banded.withColumnsRenamed(Map("_id" -> "_did", "_sig" -> "_dsig"))
-    val idx = index.withColumnsRenamed(Map("_id" -> "_cid", "_sig" -> "_csig"))
-    val matched = probes.join(idx, Seq("_band", "_bucket"))
-      .filter(ColumnBridge.column(graft.functions.SignatureAgreementAtLeast(
-        ColumnBridge.expression(col("_dsig")), ColumnBridge.expression(col("_csig")),
-        minAgree)))
-      .select(col("_did").as(idCol)).distinct()
-    val survivorsBanded = banded
-      .join(matched.select(col(idCol).as("_id")), Seq("_id"), "left_anti")
-    val losers = bucketPairs(survivorsBanded, Seq("_band", "_bucket"), "_id", "_sig",
-        maxBucketSize = 2000)
-      .filter(ColumnBridge.column(graft.functions.SignatureAgreementAtLeast(
-        ColumnBridge.expression(col("pa")), ColumnBridge.expression(col("pb")),
-        minAgree)))
-      .select(greatest(col("ia"), col("ib")).as(idCol)).distinct()
-    delta.join(matched, Seq(idCol), "left_anti")
-      .join(losers, Seq(idCol), "left_anti")
-  }
+                          shingleLen: Int = 3, threshold: Double = 0.7): DataFrame =
+    minhashDedupOver(delta, textCol, idCol, Some(index), numHashes, bands, shingleLen, threshold)
+
+  /** [[dedup]] of MinHash-banded `delta` against `index` when present. */
+  private def minhashDedupOver(delta: DataFrame, textCol: String, idCol: String,
+                               index: Option[DataFrame], numHashes: Int, bands: Int,
+                               shingleLen: Int, threshold: Double): DataFrame =
+    dedup(delta, idCol, bandedSignatures(delta, textCol, idCol, numHashes, bands, shingleLen),
+      index, maxBucketSize = 2000)(signaturesAgree(minAgreement(numHashes, threshold)))
 
   /** Index-maintaining incremental NEAR-dup tick — the MinHash analog
     * of [[incrementalExact]]: dedup `delta` against the banded index
@@ -494,31 +519,18 @@ object Dedup {
                          threshold: Double = 0.7, maxBucketSize: Int = 2000,
                          sink: DataFrame => Unit = _ => ()): DataFrame =
     incrementalIndex(conn, indexTable, sink)(
-      _.fold(minhashDedup(delta, textCol, idCol, numHashes, bands, shingleLen, threshold))(
-        minhashDedupAgainst(delta, textCol, idCol, _, numHashes, bands, shingleLen, threshold)))(
+      minhashDedupOver(delta, textCol, idCol, _, numHashes, bands, shingleLen, threshold))(
       (kept, _) => minhashIndex(kept, textCol, idCol, numHashes, bands, shingleLen, maxBucketSize))
 
   /** MinHash-LSH dedup: drop every doc that is a candidate-duplicate of a
     * lower-id doc (transitive chains collapse to the min root greedily —
-    * one connected-components-free pass, the standard near-dup policy). */
+    * one connected-components-free pass, the standard near-dup policy).
+    * The loser of a pair is its greater id, exactly [[minhashCandidates]]'
+    * id_b; the in-delta bucket cap is 2000. */
   def minhashDedup(df: DataFrame, textCol: String, idCol: String,
                    numHashes: Int = 64, bands: Int = 16,
-                   shingleLen: Int = 3, threshold: Double = 0.7): DataFrame = {
-    // r19: the loser set needs a VERDICT per in-bucket pair, not the
-    // est_jaccard value — the early-exit boolean agreement filter
-    // replaces the full-signature count + double division + filter
-    // (same pairs: see minAgreement), and losers = the pair's greater
-    // id, exactly minhashCandidates' id_b.
-    val minAgree = minAgreement(numHashes, threshold)
-    val banded = bandedSignatures(df, textCol, idCol, numHashes, bands, shingleLen)
-    val losers = bucketPairs(banded, Seq("_band", "_bucket"), "_id", "_sig",
-        maxBucketSize = 2000)
-      .filter(ColumnBridge.column(graft.functions.SignatureAgreementAtLeast(
-        ColumnBridge.expression(col("pa")), ColumnBridge.expression(col("pb")),
-        minAgree)))
-      .select(greatest(col("ia"), col("ib")).as(idCol)).distinct()
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+                   shingleLen: Int = 3, threshold: Double = 0.7): DataFrame =
+    minhashDedupOver(df, textCol, idCol, None, numHashes, bands, shingleLen, threshold)
 
   /** Near-dup candidate pairs over ANY precomputed 64-bit
     * similarity-preserving hash column (SimHash of text, the image
@@ -538,12 +550,8 @@ object Dedup {
       posexplode(array((0 until 4).map(i =>
         shiftrightunsigned(col("_sim"), i * 16).bitwiseAND(0xffffL)): _*))
         .as(Seq("_chunk_idx", "_chunk")))
-    bucketPairs(chunked, Seq("_chunk_idx", "_chunk"), "_id", "_sim", maxBucketSize)
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"),
-        bit_count(col("pa").bitwiseXOR(col("pb"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+    pairs(Banded(chunked, Seq("_chunk_idx", "_chunk"), "_sim"), maxBucketSize, distinct = true)(
+      (a, b) => bit_count(a.bitwiseXOR(b)).as("hamming"), col("hamming") <= maxHamming)
   }
 
   /** SimHash near-dup candidates over text — [[simhash]] fused into the
@@ -587,14 +595,19 @@ object Dedup {
         n)).as("_sh"))
     val l = prep.select(col("_block"), col("_id").as("id_a"), col("_sh").as("_sh_a"))
     val r = prep.select(col("_block"), col("_id").as("id_b"), col("_sh").as("_sh_b"))
-    val overlap = ColumnBridge.column(graft.functions.SetOverlap(
-      ColumnBridge.expression(col("_sh_a")), ColumnBridge.expression(col("_sh_b"))))
     l.join(r, Seq("_block"))
       .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (overlap.cast("double") /
-          (size(col("_sh_a")) + size(col("_sh_b")) - overlap)).as("jaccard"))
+      .select(col("id_a"), col("id_b"), shingleJaccard(col("_sh_a"), col("_sh_b")))
       .filter(col("jaccard") >= threshold)
+  }
+
+  /** Exact `jaccard` of two distinct-shingle arrays: |∩| natively,
+    * |∪| = |a| + |b| − |∩| — the same double as
+    * size(intersect)/size(union) without materializing either array. */
+  private def shingleJaccard(a: Column, b: Column): Column = {
+    val overlap = ColumnBridge.column(graft.functions.SetOverlap(
+      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    (overlap.cast("double") / (size(a) + size(b) - overlap)).as("jaccard")
   }
 
   /** Audit companion to [[ngramJaccardPairs]]'s block cap: the blocks a
@@ -674,18 +687,8 @@ object Dedup {
       ColumnBridge.expression(col("_sh")), numHashes))
     val banded = prep.select(col("_id"), col("_sh"),
       posexplode(bandHashes).as(Seq("_band", "_bucket")))
-    // |∩| natively; |∪| = |a| + |b| − |∩| on the already-distinct
-    // shingle arrays — the same double as size(intersect)/size(union)
-    // without materializing either result array per pair
-    val overlap = ColumnBridge.column(graft.functions.SetOverlap(
-      ColumnBridge.expression(col("pa")), ColumnBridge.expression(col("pb"))))
-    bucketPairs(banded, Seq("_band", "_bucket"), "_id", "_sh", maxBucketSize)
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"),
-        (overlap.cast("double") /
-          (size(col("pa")) + size(col("pb")) - overlap)).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .distinct() // same pair from multiple bands has identical jaccard
+    pairs(Banded(banded, Seq("_band", "_bucket"), "_sh"), maxBucketSize, distinct = true)(
+      shingleJaccard, col("jaccard") >= threshold)
   }
 
   /** Near-dup THRESHOLD SWEEP over the replayable-LSH verified pairs —
@@ -954,19 +957,22 @@ object Dedup {
     * several independent plane sets to recover recall. */
   def embeddingNearDup(df: DataFrame, vecCol: String, idCol: String, dim: Int,
                        planes: Int = 16, threshold: Double = 0.95,
-                       maxBucketSize: Int = 2000, seed: Long = 42L): DataFrame = {
-    // same join-free bucket-pair machinery as minhash/simhash: one shuffle
-    // of (bucket, id, vector), in-bucket pair explode, degenerate buckets
-    // (duplicate-heavy or low-entropy embedding sets — exactly what a
-    // dedup corpus contains) capped so no single task goes quadratic.
-    val keyed = ensureParallel(df).select(col(idCol).as("_id"), col(vecCol).as("_v"),
-      VectorFunctions.hyperplaneBucket(col(vecCol), dim, planes, seed).as("_bucket"))
-    bucketPairs(keyed, Seq("_bucket"), "_id", "_v", maxBucketSize)
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"),
-        VectorFunctions.cosine(col("pa"), col("pb")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-  }
+                       maxBucketSize: Int = 2000, seed: Long = 42L): DataFrame =
+    // degenerate buckets (duplicate-heavy or low-entropy embedding sets —
+    // exactly what a dedup corpus contains) are capped so no single task
+    // goes quadratic; one bucket per vector, so no pair repeats
+    pairs(hyperplaneBanded(df, vecCol, idCol, dim, planes, seed), maxBucketSize,
+      distinct = false)(cosine, col("cosine") >= threshold)
+
+  /** The hyperplane banded frame — (_id, _v, _bucket), one bucket per
+    * vector — shared by the batch, index and probe paths. */
+  private def hyperplaneBanded(df: DataFrame, vecCol: String, idCol: String, dim: Int,
+                               planes: Int, seed: Long): Banded =
+    Banded(ensureParallel(df).select(col(idCol).as("_id"), col(vecCol).as("_v"),
+      VectorFunctions.hyperplaneBucket(col(vecCol), dim, planes, seed).as("_bucket")),
+      Seq("_bucket"), "_v")
+
+  private def cosine(a: Column, b: Column): Column = VectorFunctions.cosine(a, b).as("cosine")
 
   /** Hyperplane-bucket index of an embedding corpus — the persisted
     * side of incremental EMBEDDING dedup, completing the
@@ -979,48 +985,40 @@ object Dedup {
     * quantize upstream via [[VectorFunctions.quantize]] when 4× matters). */
   def embeddingIndex(df: DataFrame, vecCol: String, idCol: String, dim: Int,
                      planes: Int = 16, seed: Long = 42L,
-                     maxBucketSize: Int = 2000): DataFrame = {
-    capBuckets(ensureParallel(df).select(
-      VectorFunctions.hyperplaneBucket(col(vecCol), dim, planes, seed).as("_bucket"),
-      col(idCol).as("_id"), col(vecCol).as("_v")), Seq("_bucket"), maxBucketSize)
-  }
+                     maxBucketSize: Int = 2000): DataFrame =
+    capBuckets(hyperplaneBanded(df, vecCol, idCol, dim, planes, seed).df
+      .select(col("_bucket"), col("_id"), col("_v")), Seq("_bucket"), maxBucketSize)
 
   /** Incremental embedding near-dup candidates: DELTA vectors vs an
     * already-indexed corpus ([[embeddingIndex]], same parameters) —
-    * equi-join on the bucket key, verify cosine. O(delta) probe rows;
-    * the corpus is touched only through its index. Returns
-    * (delta_id, corpus_id, cosine) distinct pairs at `threshold`.
-    * Same join-strategy trade as [[minhashAgainstIndex]]: small ticks
-    * broadcast the probe side via AQE; bulk deltas fall back to one
-    * shuffle of the index (vector-sized here — quantize upstream when
-    * that matters). */
+    * [[probe]] on the bucket key, verify cosine. Returns
+    * (delta_id, corpus_id, cosine) distinct pairs at `threshold`. */
   def embeddingAgainstIndex(delta: DataFrame, vecCol: String, idCol: String,
                             index: DataFrame, dim: Int, planes: Int = 16,
-                            seed: Long = 42L, threshold: Double = 0.95): DataFrame = {
-    val probes = ensureParallel(delta).select(
-      VectorFunctions.hyperplaneBucket(col(vecCol), dim, planes, seed).as("_bucket"),
-      col(idCol).as("_did"), col(vecCol).as("_dv"))
-    probes.join(index, Seq("_bucket"))
-      .select(col("_did").as("delta_id"), col("_id").as("corpus_id"),
-        VectorFunctions.cosine(col("_dv"), col("_v")).as("cosine"))
+                            seed: Long = 42L, threshold: Double = 0.95): DataFrame =
+    probe(hyperplaneBanded(delta, vecCol, idCol, dim, planes, seed), index)
+      .select(col("_did").as("delta_id"), col("_cid").as("corpus_id"),
+        cosine(col("_dp"), col("_cp")))
       .filter(col("cosine") >= threshold)
       .distinct()
-  }
 
   /** Incremental embedding dedup tick: drop delta vectors with a
     * verified corpus match, then near-dedup the remainder within
-    * itself (greedy min-id policy, as [[minhashDedupAgainst]]). */
+    * itself (greedy min-id policy, as [[minhashDedupAgainst]]) — one
+    * [[dedup]] over one banded subtree. */
   def embeddingDedupAgainst(delta: DataFrame, vecCol: String, idCol: String,
                             index: DataFrame, dim: Int, planes: Int = 16,
                             seed: Long = 42L, threshold: Double = 0.95,
-                            maxBucketSize: Int = 2000): DataFrame = {
-    val matched = embeddingAgainstIndex(delta, vecCol, idCol, index, dim, planes, seed, threshold)
-      .select(col("delta_id").as(idCol)).distinct()
-    val rest = delta.join(matched, Seq(idCol), "left_anti")
-    val losers = embeddingNearDup(rest, vecCol, idCol, dim, planes, threshold, maxBucketSize, seed)
-      .select(col("id_b").as(idCol)).distinct()
-    rest.join(losers, Seq(idCol), "left_anti")
-  }
+                            maxBucketSize: Int = 2000): DataFrame =
+    embeddingDedupOver(delta, vecCol, idCol, Some(index), dim, planes, seed, threshold,
+      maxBucketSize)
+
+  /** [[dedup]] of hyperplane-banded `delta` against `index` when present. */
+  private def embeddingDedupOver(delta: DataFrame, vecCol: String, idCol: String,
+                                 index: Option[DataFrame], dim: Int, planes: Int, seed: Long,
+                                 threshold: Double, maxBucketSize: Int): DataFrame =
+    dedup(delta, idCol, hyperplaneBanded(delta, vecCol, idCol, dim, planes, seed), index,
+      maxBucketSize)((a, b) => VectorFunctions.cosine(a, b) >= threshold)
 
   /** Index-maintaining incremental EMBEDDING dedup tick — the embedding
     * analog of [[incrementalMinhash]], same replay-idempotence and the
@@ -1034,12 +1032,8 @@ object Dedup {
                            dim: Int, planes: Int = 16, seed: Long = 42L,
                            threshold: Double = 0.95, maxBucketSize: Int = 2000,
                            sink: DataFrame => Unit = _ => ()): DataFrame =
-    incrementalIndex(conn, indexTable, sink)(_.fold(
-      delta.join(embeddingNearDup(delta, vecCol, idCol, dim, planes, threshold,
-          maxBucketSize, seed).select(col("id_b").as(idCol)).distinct(),
-        Seq(idCol), "left_anti"))(
-      embeddingDedupAgainst(delta, vecCol, idCol, _, dim, planes, seed, threshold,
-        maxBucketSize)))(
+    incrementalIndex(conn, indexTable, sink)(embeddingDedupOver(delta, vecCol, idCol, _, dim,
+      planes, seed, threshold, maxBucketSize))(
       (kept, _) => embeddingIndex(kept, vecCol, idCol, dim, planes, seed, maxBucketSize))
 
   /** Multi-table embedding near-dup — the recall lever
@@ -1086,12 +1080,8 @@ object Dedup {
     require(bucketCols.nonEmpty, "at least one bucket column required")
     val exploded = ensureParallel(df).select(col(idCol).as("_id"), col(vecCol).as("_v"),
       posexplode(array(bucketCols: _*)).as(Seq("_table", "_bucket")))
-    bucketPairs(exploded, Seq("_table", "_bucket"), "_id", "_v", maxBucketSize)
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"),
-        VectorFunctions.cosine(col("pa"), col("pb")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .distinct()
+    pairs(Banded(exploded, Seq("_table", "_bucket"), "_v"), maxBucketSize, distinct = true)(
+      cosine, col("cosine") >= threshold)
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -1153,13 +1143,10 @@ object Dedup {
                                 maxClusterSize: Int = 2000): DataFrame = {
     val keyed = ensureParallel(df).select(col(idCol).as("_id"), col(vecCol).as("_v"),
       clusterCol.as("_cluster"), rankCol.cast("double").as("_rank"))
-    val pairs = bucketPairs(keyed, Seq("_cluster"), "_id", "_v", maxClusterSize)
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"),
-        VectorFunctions.cosine(col("pa"), col("pb")).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    val verified = pairs(Banded(keyed, Seq("_cluster"), "_v"), maxClusterSize,
+        distinct = false)(cosine, col("cosine") >= threshold)
       .select("id_a", "id_b")
-    val members = connectedComponents(pairs)
+    val members = connectedComponents(verified)
       .join(keyed.select(col("_id"), col("_rank")), col("id") === col("_id"))
       .select(col("id"), col("component"), col("_rank"))
     val minRank = members.groupBy("component").agg(min("_rank").as("_mr"))
@@ -1332,16 +1319,7 @@ object Dedup {
     // same joined chunk_text and md5 — CdcExpressionsSpec pins parity
     // against the old composition) inside whole-stage codegen with zero
     // exchanges.
-    ensureParallel(df)
-      // null text coalesces to 0 (the no-row doc, same as before);
-      // assert_true returns NULL on pass, so the filter keeps every
-      // compliant row while pinning the guard into the plan
-      .filter(assert_true(
-        coalesce(length(col(textCol)), lit(0)) <= maxDocChars,
-        concat(lit(s"contentDefinedChunks: document over maxDocChars=$maxDocChars: "),
-          col(idCol).cast("string"),
-          lit(" ("), length(col(textCol)).cast("string"),
-          lit(" chars) — pre-chunk upstream or raise the cap"))).isNull)
+    guardedDocs(df, textCol, idCol, maxDocChars)
       .select(col(idCol), explode(ColumnBridge.column(
         graft.functions.CdcChunksExpr(
           ColumnBridge.expression(col(textCol)), boundaryHex))).as("_c"))
@@ -1350,6 +1328,20 @@ object Dedup {
         col("_c.n_words").as("n_words"),
         col("_c.chunk_md5").as("chunk_md5"))
   }
+
+  /** `df` spread for the per-row CDC work ([[ensureParallel]]) behind
+    * the one doc-size guard: a document over `maxDocChars` fails the job
+    * naming it. Null text coalesces to 0 (the no-row doc); assert_true
+    * returns NULL on pass, so the filter keeps every compliant row while
+    * pinning the guard into the plan. */
+  private def guardedDocs(df: DataFrame, textCol: String, idCol: String,
+                          maxDocChars: Int): DataFrame =
+    ensureParallel(df).filter(assert_true(
+      coalesce(length(col(textCol)), lit(0)) <= maxDocChars,
+      concat(lit(s"contentDefinedChunks: document over maxDocChars=$maxDocChars: "),
+        col(idCol).cast("string"),
+        lit(" ("), length(col(textCol)).cast("string"),
+        lit(" chars) — pre-chunk upstream or raise the cap"))).isNull)
 
   /** Chunk-CONTAINMENT near-dup pairs over [[contentDefinedChunks]]:
     * containment(a→b) = Σ_{shared digests} min(massₐ, mass_b) /
@@ -1390,30 +1382,30 @@ object Dedup {
     // doc_words are word counts bounded by maxDocChars (< 2^31), so
     // they cross both exchanges as ints and widen back in the final
     // aggregate — the output schema and values are identical.
-    // r20 two-level bucket aggregation (VERDICT r19 #3): most digests
-    // are singletons, so the old single groupBy paid an OBJECT-hash
-    // collect_list buffer per digest plus a full-width exchange of
-    // every row just to throw the non-pairing buckets away afterwards.
-    // Bucket SIZES come first from a codegen'd long-count HashAggregate
-    // (partial-agg-friendly, narrow rows); only rows of PAIRING buckets
-    // (2..maxBucketSize — the identical gate bucketPairs applied) reach
-    // the list aggregation. The checkpoint materializes the chunking
-    // once for both passes.
+    // One bucket aggregation, its [2, maxBucketSize] gate bucketPairs'
+    // own: a two-level form (a bucket-size pre-pass over a
+    // localCheckpoint of the whole chunk table) ran three more jobs and
+    // measured slower in a same-host A/B.
     val mass = chunkMass(df, textCol, idCol, boundaryHex)
       .select(col(idCol), unhex(col("chunk_md5")).as("_kb"),
         struct(col("mass").cast("int").as("mass"),
           col("doc_words").cast("int").as("doc_words")).as("_p"))
-      .localCheckpoint(true)
-    bucketPairs(capBuckets(mass, Seq("_kb"), maxBucketSize, minSize = 2),
-        Seq("_kb"), idCol, "_p", maxBucketSize = 0)
+    containmentScores(bucketPairs(mass, Seq("_kb"), idCol, "_p", maxBucketSize)
       .select(least(col("ia"), col("ib")).as("id_a"),
         greatest(col("ia"), col("ib")).as("id_b"),
         least(col("pa.mass"), col("pb.mass")).as("_sh"), // symmetric min survives the swap
         when(col("ia") < col("ib"), col("pa.doc_words"))
           .otherwise(col("pb.doc_words")).as("_wa"),
         when(col("ia") < col("ib"), col("pb.doc_words"))
-          .otherwise(col("pa.doc_words")).as("_wb"))
-      .groupBy(col("id_a"), col("id_b"))
+          .otherwise(col("pa.doc_words")).as("_wb")), thresholdFp)
+  }
+
+  /** The one containment scoring tail over per-(pair, shared digest)
+    * rows (id_a, id_b, `_sh` shared mass, `_wa`/`_wb` the sides' doc
+    * totals): shared_words = Σ `_sh`, fixed-point containments
+    * (truncating millionths), gated on the LARGER one. */
+  private def containmentScores(sides: DataFrame, thresholdFp: Long): DataFrame =
+    sides.groupBy(col("id_a"), col("id_b"))
       .agg(sum(col("_sh")).as("shared_words"),
         max(col("_wa")).cast("long").as("words_a"),
         max(col("_wb")).cast("long").as("words_b"))
@@ -1422,7 +1414,6 @@ object Dedup {
       .filter(greatest(col("containment_a_fp"), col("containment_b_fp")) >= thresholdFp)
       .select(col("id_a"), col("id_b"), col("shared_words"), col("words_a"),
         col("words_b"), col("containment_a_fp"), col("containment_b_fp"))
-  }
 
   /** Per-(doc, digest) chunk mass with the doc's word total riding
     * along — the unit row of both the batch containment pairing and the
@@ -1437,13 +1428,7 @@ object Dedup {
     // mass expression emits the identical rows with zero shuffles where
     // the composition paid a groupBy(doc, digest) exchange plus a
     // doc-totals self-join (two more corpus-keyed exchanges).
-    ensureParallel(df)
-      .filter(assert_true(
-        coalesce(length(col(textCol)), lit(0)) <= DefaultMaxDocChars,
-        concat(lit(s"contentDefinedChunks: document over maxDocChars=$DefaultMaxDocChars: "),
-          col(idCol).cast("string"),
-          lit(" ("), length(col(textCol)).cast("string"),
-          lit(" chars) — pre-chunk upstream or raise the cap"))).isNull)
+    guardedDocs(df, textCol, idCol, DefaultMaxDocChars)
       .select(col(idCol), explode(ColumnBridge.column(
         graft.functions.CdcChunkMassExpr(
           ColumnBridge.expression(col(textCol)), boundaryHex))).as("_m"))
@@ -1502,22 +1487,15 @@ object Dedup {
         col("doc_words").as("_dw"))
     // each unordered pair once: a corpus partner always pairs from the
     // delta side; a delta-delta pair only from its smaller-id side
-    probe.join(other, Seq("chunk_md5"))
+    containmentScores(probe.join(other, Seq("chunk_md5"))
       .filter(col("_oi") =!= col("_di") &&
         (col("_src") === 0 || col("_di") < col("_oi")))
       .select(least(col("_di"), col("_oi")).as("id_a"),
         greatest(col("_di"), col("_oi")).as("id_b"),
         least(col("_dm"), col("_om")).as("_sh"),
         when(col("_di") < col("_oi"), col("_dw")).otherwise(col("_ow")).as("_wa"),
-        when(col("_di") < col("_oi"), col("_ow")).otherwise(col("_dw")).as("_wb"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(sum(col("_sh")).as("shared_words"),
-        max(col("_wa")).as("words_a"), max(col("_wb")).as("words_b"))
-      .withColumn("containment_a_fp", expr("shared_words * 1000000L DIV words_a"))
-      .withColumn("containment_b_fp", expr("shared_words * 1000000L DIV words_b"))
-      .filter(greatest(col("containment_a_fp"), col("containment_b_fp")) >= thresholdFp)
-      .select(col("id_a"), col("id_b"), col("shared_words"), col("words_a"),
-        col("words_b"), col("containment_a_fp"), col("containment_b_fp"))
+        when(col("_di") < col("_oi"), col("_ow")).otherwise(col("_dw")).as("_wb")),
+      thresholdFp)
   }
 
   /** The containment-pair RESOLUTION rule (VERDICT r16 #4): per pair,

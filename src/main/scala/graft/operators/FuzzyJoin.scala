@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnBridge
 
 import graft.functions.TextFunctions
 
@@ -15,10 +14,9 @@ import graft.functions.TextFunctions
   *
   *  1. BLOCK: each row enters one bucket per blocking key (default: the
   *     first and the last token of the normalized key — a typo in one
-  *     token still collides on the other). Bucket membership is a plain
-  *     groupBy; candidate generation is the capped in-bucket pair
-  *     explode ([[graft.functions.InBucketPairs]], the
-  *     [[Dedup.minhashCandidates]] machinery) — map tasks emit pairs
+  *     token still collides on the other). Candidate generation is
+  *     [[Dedup.bucketPairs]], the capped in-bucket pair explode every
+  *     LSH family shares — map tasks emit pairs
   *     straight out of the aggregation, no self-join, and a
   *     pathologically hot block (every "premium" product) degrades to a
   *     DROPPED bucket at `maxBlockSize` instead of a quadratic task.
@@ -69,13 +67,7 @@ object FuzzyJoin {
       keyed.select(lit(i).as("_b"), b(col("_key")).as("_bkey"),
         col("_id"), col("_key"))
     }.reduce(_ unionAll _)
-    val grouped = exploded
-      .groupBy(col("_b"), col("_bkey"))
-      .agg(collect_list(struct(col("_id").as("i"), col("_key").as("p"))).as("items"))
-      .filter(size(col("items")) >= 2 &&
-        (if (maxBlockSize > 0) size(col("items")) <= maxBlockSize else lit(true)))
-    val pairs = grouped.select(ColumnBridge.column(graft.functions.InBucketPairs(
-      ColumnBridge.expression(col("items")))).as(Seq("ia", "ib", "pa", "pb")))
+    val pairs = Dedup.bucketPairs(exploded, Seq("_b", "_bkey"), "_id", "_key", maxBlockSize)
     // normalize orientation (pair explode follows collect order), verify
     // distance on candidates only, THEN dedup across blockers
     val swap = col("ia") <= col("ib")

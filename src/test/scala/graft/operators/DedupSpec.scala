@@ -703,6 +703,73 @@ class DedupSpec extends SparkSpec {
     assert(incr.exists { case (d, c, _) => d == 101L && c == 3L })
   }
 
+  private def sortedRows(d: org.apache.spark.sql.DataFrame): Seq[String] =
+    d.collect().map(_.toString).toSeq.sorted
+
+  /** Planted embedding tick: 20 random corpus vectors; a delta holding
+    * scaled copies of corpus vectors 0-4 (ids 100-104), ten fresh
+    * vectors (200-209) plus scaled copies of the first five of them
+    * (210-214), and six identical vectors (300-305) whose one bucket
+    * holds more than the `maxBucketSize = 5` the cases run with. */
+  private def plantedEmbeddingTick(): (org.apache.spark.sql.DataFrame,
+                                       org.apache.spark.sql.DataFrame) = {
+    val rnd = new scala.util.Random(34)
+    val corpusVecs = (0L until 20L).map(i => i -> randVec(rnd))
+    val fresh = (200L until 210L).map(i => i -> randVec(rnd))
+    val hot = Seq.fill(16)(0.25f)
+    val delta = corpusVecs.take(5).map { case (i, v) => (i + 100L) -> v.map(_ * 1.001f) } ++
+      fresh ++ fresh.take(5).map { case (i, v) => (i + 10L) -> v.map(_ * 1.001f) } ++
+      (300L until 306L).map(_ -> hot)
+    (df(embSchema, corpusVecs.map { case (i, v) => Row(i, v) }),
+      df(embSchema, delta.map { case (i, v) => Row(i, v) }))
+  }
+
+  test("embeddingDedupAgainst == delta minus its index matches minus the in-remainder losers") {
+    val (corpus, delta) = plantedEmbeddingTick()
+    val idx = Dedup.embeddingIndex(corpus, "v", "vec_id", dim = 16, planes = 8)
+    val matched = Dedup.embeddingAgainstIndex(delta, "v", "vec_id", idx,
+        dim = 16, planes = 8, threshold = 0.999)
+      .select(col("delta_id").as("vec_id")).distinct()
+    val rest = delta.join(matched, Seq("vec_id"), "left_anti")
+    val losers = Dedup.embeddingNearDup(rest, "v", "vec_id", dim = 16, planes = 8,
+        threshold = 0.999, maxBucketSize = 5)
+      .select(col("id_b").as("vec_id")).distinct()
+    val expected = rest.join(losers, Seq("vec_id"), "left_anti")
+    val kept = Dedup.embeddingDedupAgainst(delta, "v", "vec_id", idx, dim = 16, planes = 8,
+      threshold = 0.999, maxBucketSize = 5)
+    assert(sortedRows(kept) == sortedRows(expected))
+    val keptIds = kept.select("vec_id").collect().map(_.getLong(0)).toSet
+    assert((100L to 104L).forall(i => !keptIds(i)), s"corpus copies must drop: $keptIds")
+    assert((210L to 214L).forall(i => !keptIds(i)) && (200L to 209L).forall(keptIds),
+      s"within-delta copies drop, their originals stay: $keptIds")
+    assert((300L to 305L).forall(keptIds), s"an over-cap bucket pairs nothing: $keptIds")
+  }
+
+  test("minhashDedupAgainst over an EMPTY index == minhashDedup") {
+    val d = corpusWithMutations(30)
+    val empty = Dedup.minhashIndex(d.filter(lit(false)), "text", "doc_id",
+      numHashes = 32, bands = 8)
+    val against = Dedup.minhashDedupAgainst(d, "text", "doc_id", empty,
+      numHashes = 32, bands = 8, threshold = 0.5)
+    val batch = Dedup.minhashDedup(d, "text", "doc_id", numHashes = 32, bands = 8,
+      threshold = 0.5)
+    assert(sortedRows(against) == sortedRows(batch))
+    assert(batch.count() < d.count(), "the fixture must plant in-delta near-dups")
+  }
+
+  test("embeddingDedupAgainst over an EMPTY index == incrementalEmbedding's first tick") {
+    val (_, delta) = plantedEmbeddingTick()
+    val empty = Dedup.embeddingIndex(delta.filter(lit(false)), "v", "vec_id",
+      dim = 16, planes = 8, maxBucketSize = 5)
+    val against = Dedup.embeddingDedupAgainst(delta, "v", "vec_id", empty, dim = 16,
+      planes = 8, threshold = 0.999, maxBucketSize = 5)
+    val conn = new graft.sources.ParquetConnector(spark, tmpDir("graft_embfirst_"))
+    val first = Dedup.incrementalEmbedding(delta, "v", "vec_id", conn, "emb_idx",
+      dim = 16, planes = 8, threshold = 0.999, maxBucketSize = 5)
+    assert(sortedRows(against) == sortedRows(first))
+    assert(first.count() < delta.count(), "the fixture must plant in-delta copies")
+  }
+
   test("lineDedup: corpus-wide first occurrence wins; all-boilerplate docs vanish") {
     val d = df(docSchema, Seq(
       Row(1L, "BOILER\nunique one\nBOILER"),       // within-doc dup of BOILER too
