@@ -516,7 +516,8 @@ object Bench {
       val srcDir = work + "/src"; val outDir = work + "/out"; val ckpt = work + "/ck"
       events.filter(col("ts") < lit(sliceStarts.head))
         .write.mode("append").parquet(srcDir)
-      val schema = spark.read.parquet(srcDir).schema
+      val schema = graft.sources.ParquetConnector.footerSchema(spark, srcDir)
+        .getOrElse(spark.read.parquet(srcDir).schema)
       def tick(): Unit = {
         val q = build(spark.readStream.schema(schema).parquet(srcDir))
           .writeStream.format("parquet").option("path", outDir)

@@ -713,9 +713,13 @@ object TrainingDataPipeline {
       indexes.filter(ix => work.tables.contains(ix.table))
         .foreach(ix => views(ix.table) = work.read(ix.table))
       // the gates run in list order, each over the previous survivors;
-      // an absent index degrades to within-delta dedup
-      val kept = indexes.foldLeft(clean)((d, ix) => ix.probe(d, views.get(ix.table)))
-        .localCheckpoint(true) // sever lineage before every write below
+      // an absent index degrades to within-delta dedup. Each gate's
+      // survivors are materialized once: a lazy gate output fed to the
+      // next gate would be planned, and computed, once per branch that
+      // reads it (the mh gate's probe, pairing and anti-join). The last
+      // checkpoint also severs lineage before every write below.
+      val kept = indexes.foldLeft(clean)((d, ix) =>
+        ix.probe(d, views.get(ix.table)).localCheckpoint(true))
       work.write(kept, "delta_release")
 
       // ---- durable release append, rows stamped with this tick's
@@ -1044,8 +1048,8 @@ object TrainingDataPipeline {
         val relGen = st.getOrElse("release", 0L)
         // r20 (VERDICT r19 #4): the rebuild is INCREMENTAL — only docs
         // the index does not fully cover re-shingle (O(strand), not
-        // O(corpus text)), and a settled index (everything covered, no
-        // stray row, no over-cap bucket) skips the rewrite outright.
+        // O(corpus text)), and a settled index (one that row-equals its
+        // rebuild, cap-stranded docs included) skips the rewrite outright.
         // Dedup.minhashIndexIncremental proves row-equivalence to the
         // full rebuild; the _gen stamp coarsens identically (the full
         // rebuild stamped every row at relGen too), and wm_mh advances

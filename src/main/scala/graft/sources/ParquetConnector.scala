@@ -1,7 +1,11 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Path-addressed parquet "database": each table is `<dir>/<name>.parquet`.
   * Plays the role the MySQL transport plays in the reference
@@ -43,8 +47,12 @@ object ParquetConnector {
     // incremental readSince watermark at scale (PlanEvidenceSpec pins
     // pushdown on the naive-timestamp events table).
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val nanos = nanosAnnotatedColumns(spark, path)
-    val df = spark.read.parquet(path)
+    val footer = firstFooter(spark, path)
+    val nanos = footer.fold(Set.empty[String])(f => nanosAnnotatedColumns(f._1))
+    // the schema comes from the footer just read on the driver: Spark's
+    // own inference would submit a job to read that same footer again
+    val df = schemaOf(spark, footer)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
     import org.apache.spark.sql.functions.{col, expr}
     df.schema.fields.foldLeft(df) { (d, f) =>
       if (nanos.contains(f.name) && f.dataType == org.apache.spark.sql.types.LongType)
@@ -61,60 +69,75 @@ object ParquetConnector {
     }
   }
 
-  /** Columns annotated TIMESTAMP(unit=NANOS) in the parquet footer of the
-    * first data file under `path` — searched RECURSIVELY, so partitioned
-    * (Hive-layout) datasets with files in `col=val/` subdirectories are
-    * detected too (files of one table share a schema). Detection failures
-    * are logged, not swallowed: a silent Set.empty would surface nanos
-    * columns as raw Long. */
-  private def nanosAnnotatedColumns(spark: SparkSession, path: String): Set[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
+  /** The schema `spark.read.parquet(path)` infers, taken from the
+    * footer of the table's first data file on the driver — or None
+    * where Spark's inference would read more than one footer (a
+    * Hive-layout or otherwise nested directory, summary files,
+    * `mergeSchema` on) or no footer could be read. */
+  def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    schemaOf(spark, firstFooter(spark, path))
+
+  /** A [[firstFooter]] result's schema, when that footer alone decides
+    * it, converted exactly as Spark's inference does (its own row
+    * metadata first, else the parquet types under the session's
+    * conversion flags); the relation then makes every field nullable. */
+  private def schemaOf(spark: SparkSession, footer: Option[(Footer, Boolean)]): Option[StructType] =
+    footer.collect { case (f, true) => ParquetFileFormat.readSchemaFromFooter(f,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)) }
+
+  /** The footer of the first data file under `path`, and whether that
+    * footer alone is what Spark's schema inference reads. In a flat
+    * table directory Spark reads the first visible file in path order
+    * (unless summary files or `mergeSchema` are on), so that is the
+    * file taken here; in a nested (Hive-layout) one the first file of
+    * the first subdirectory is taken, for the nanos detection only:
+    * files of one table share a schema. Failures are logged, not
+    * swallowed: a silent None would surface nanos columns as raw Long. */
+  private def firstFooter(spark: SparkSession, path: String): Option[(Footer, Boolean)] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
     try {
       val conf = spark.sessionState.newHadoopConf()
       val p = new HPath(path)
       val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) return Set.empty
-      val file: Option[HPath] =
-        if (fs.getFileStatus(p).isFile) Some(p)
-        else {
-          // recursive listing; first .parquet data file in any subdir
-          val it = fs.listFiles(p, true)
-          var found: Option[HPath] = None
-          while (found.isEmpty && it.hasNext) {
-            val s = it.next()
-            val n = s.getPath.getName
-            val parent = s.getPath.getParent.getName
-            // skip hidden files AND files inside metadata dirs (e.g. the
-            // partitioned connector's _graft_pkidx pk-hash sidecar) — those
-            // are not data files of this table
-            if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".") &&
-                !parent.startsWith("_") && !parent.startsWith("."))
-              found = Some(s.getPath)
-          }
-          found
-        }
-      file.fold(Set.empty[String]) { f =>
+      if (!fs.exists(p)) return None
+      // Spark's listing rule: `_`/`.` names are hidden (so is the
+      // partitioned connector's _graft_pkidx sidecar), except the
+      // parquet summary files and `k=v` directory names
+      def visible(n: String): Boolean =
+        n.startsWith("_metadata") || n.startsWith("_common_metadata") ||
+          !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+      def listing(dir: HPath) =
+        fs.listStatus(dir).filter(s => visible(s.getPath.getName)).sortBy(_.getPath.toString)
+      def first(dir: HPath): Option[HPath] = {
+        val (files, dirs) = listing(dir).partition(_.isFile)
+        files.headOption.map(_.getPath).orElse(dirs.iterator.flatMap(d => first(d.getPath)).nextOption())
+      }
+      val exact = listing(p).forall(s => s.isFile && !s.getPath.getName.startsWith("_")) &&
+        !spark.sessionState.conf.isParquetSchemaMergingEnabled
+      first(p).map { f =>
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-        try {
-          reader.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
-            case fld if fld.isPrimitive && (fld.getLogicalTypeAnnotation match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-              case _ => false
-            }) => fld.getName
-          }.toSet
-        } finally reader.close()
+        try (new Footer(f, reader.getFooter), exact) finally reader.close()
       }
     } catch {
       case e: Exception =>
         org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"nanos-timestamp detection failed for $path: ${e.getMessage}")
-        Set.empty
+          .warn(s"parquet footer read failed for $path: ${e.getMessage}")
+        None
     }
+  }
+
+  /** Columns annotated TIMESTAMP(unit=NANOS) in a parquet footer. */
+  private def nanosAnnotatedColumns(f: Footer): Set[String] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import scala.jdk.CollectionConverters._
+    f.getParquetMetadata.getFileMetaData.getSchema.getFields.asScala.collect {
+      case fld if fld.isPrimitive && (fld.getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => false
+      }) => fld.getName
+    }.toSet
   }
 }
 

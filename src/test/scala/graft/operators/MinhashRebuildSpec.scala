@@ -86,4 +86,22 @@ class MinhashRebuildSpec extends SparkSpec {
     assert(incr.isDefined, "an over-cap bucket must force a re-cap")
     assert(rows(incr.get) === rows(full))
   }
+
+  test("cap-stranded docs settle: the second maintenance skips the rewrite") {
+    val all = corpus(6, Seq(1L, 2L))
+    // appends across ticks are capped per tick only, so the trio buckets
+    // (3 members each) grew past the cap of 2 in the stored index
+    val grown = Dedup.minhashIndex(all, "text", "doc_id", maxBucketSize = 0)
+    val first = Dedup.minhashIndexIncremental(all, "text", "doc_id", grown, maxBucketSize = 2)
+    assert(first.isDefined, "an over-cap bucket must force a re-cap")
+    assert(rows(first.get) === rows(Dedup.minhashIndex(all, "text", "doc_id", maxBucketSize = 2)))
+    // the re-cap strands every trio member: none of its buckets fits
+    assert(first.get.filter(col("_id") < 1000L).count() === 0L)
+    // the first maintenance writes its rebuild; the second finds the
+    // stored index equal to its own rebuild, stranded docs included
+    val c = new graft.sources.ParquetConnector(spark, tmpDir("graft_mh_settle_"))
+    c.write(first.get, "mh_index")
+    assert(Dedup.minhashIndexIncremental(all, "text", "doc_id", c.read("mh_index"),
+      maxBucketSize = 2).isEmpty, "a settled index with cap-stranded docs must skip")
+  }
 }

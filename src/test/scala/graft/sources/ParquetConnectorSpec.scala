@@ -127,4 +127,66 @@ class ParquetConnectorSpec extends SparkSpec {
     assert(events.schema("ts").dataType == TimestampType)
     assert(events.count() > 0)
   }
+
+  /** `readTable` takes its schema from a footer it reads on the driver
+    * instead of Spark's inference job: pins that this gives the inferred
+    * relation's schema — nullability included — and its rows, and that
+    * `readTable` reads the same through the footer as through its
+    * inference fallback (forced here by `mergeSchema` on a directory).
+    * `viaFooter`: whether the footer path applies to `path` at all. */
+  private def assertFooterSchemaEquivalent(path: String, viaFooter: Boolean = true): Unit = {
+    def rows(d: org.apache.spark.sql.DataFrame) = d.toJSON.collect().sorted.toSeq
+    val table = ParquetConnector.readTable(spark, path) // sets the read flags
+    val inferred = spark.read.parquet(path)
+    val footer = ParquetConnector.footerSchema(spark, path)
+    assert(footer.isDefined == viaFooter, path)
+    footer.foreach { s =>
+      val read = spark.read.schema(s).parquet(path)
+      assert(read.schema == inferred.schema, path)
+      assert(rows(read) == rows(inferred), path)
+    }
+    val key = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(key, "true")
+    val fallback = try {
+      // a single file is one footer either way
+      assert(ParquetConnector.footerSchema(spark, path).isEmpty ||
+        Files.isRegularFile(Paths.get(path)), path)
+      ParquetConnector.readTable(spark, path)
+    } finally spark.conf.unset(key)
+    assert(table.schema == fallback.schema, path)
+    assert(rows(table) == rows(fallback), path)
+  }
+
+  test("footer schema equals the inferred schema on every sf0.001 table") {
+    val sf = Paths.get("/root/testdata/sf0.001")
+    val tables = Files.list(sf).iterator().asScala.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq.sorted
+    assert(tables.exists(_.endsWith("/events.parquet")) && tables.size >= 10)
+    tables.foreach(assertFooterSchemaEquivalent(_))
+  }
+
+  test("footer schema equals the inferred schema on written edge-case tables") {
+    val c = fresh()
+    def at(t: String) = c.tablePath(t).toString
+    c.write(spark.sql("SELECT 1L AS id, TIMESTAMP_NTZ'2024-03-01 10:00:00' AS t " +
+      "UNION ALL SELECT 2L, NULL"), "ntz")
+    c.write(spark.sql("SELECT 1L AS id, NULL AS empty"), "promoted")
+    c.write(spark.sql("SELECT 1L AS id, named_struct('a', 1, 'b', array('x', NULL)) AS s, " +
+      "array(named_struct('k', 2L)) AS arr, map('m', array(1.5D)) AS mp, " +
+      "CAST(NULL AS MAP<STRING, INT>) AS nm"), "nested")
+    c.write(usersDf.limit(0), "empty")
+    // several part files appended: the first in path order decides
+    c.write(usersDf, "appended")
+    c.write(usersDf.limit(2), "appended", SaveMode.Append)
+    Seq("ntz", "promoted", "nested", "empty", "appended").foreach(t => assertFooterSchemaEquivalent(at(t)))
+    assert(c.read("ntz").schema("t").dataType == TimestampType)
+    assert(c.read("empty").count() == 0L)
+  }
+
+  test("a Hive-layout partitioned table takes the inference fallback") {
+    val c = new PartitionedParquetConnector(spark, tmpDir("graft_pq_part_"))
+    c.write(usersDf, "users")
+    assertFooterSchemaEquivalent(c.tablePath("users").toString, viaFooter = false)
+    assert(c.readWithPart("users").columns.contains(c.partCol) && c.count("users") == 5L)
+  }
 }
