@@ -90,7 +90,7 @@ object Layout {
   def compactSmallFiles(spark: org.apache.spark.sql.SparkSession, path: String,
                         targetFileBytes: Long = 128L << 20): (Int, Int) = {
     require(targetFileBytes > 0L, s"targetFileBytes must be positive, got $targetFileBytes")
-    val dataFiles = graft.sources.FileTableOps.dataFiles(java.nio.file.Paths.get(path))
+    val dataFiles = graft.sources.FileTableOps.dataFiles(java.nio.file.Paths.get(path), ".parquet")
     require(dataFiles.nonEmpty, s"compactSmallFiles: no data files under $path")
     val totalBytes = dataFiles.map(java.nio.file.Files.size).sum
     val target = math.max(1L, (totalBytes + targetFileBytes - 1L) / targetFileBytes).toInt
@@ -99,12 +99,10 @@ object Layout {
     // that has nothing to compact (the rewrite is the cost the skip
     // guards; correctness is unchanged either way)
     if (dataFiles.length <= target) return (dataFiles.length, dataFiles.length)
-    val dir = java.nio.file.Paths.get(path).getParent
-    val tmp = java.nio.file.Paths.get(dir.toString,
-      s".tmp_compact_${System.nanoTime()}")
-    spark.read.parquet(path).coalesce(target)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
-    graft.sources.FileTableOps.replace(dir.toString, tmp, java.nio.file.Paths.get(path))
+    graft.sources.FileTableOps.publish(java.nio.file.Paths.get(path)) { tmp =>
+      spark.read.parquet(path).coalesce(target)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
+    }
     (dataFiles.length, target)
   }
 }

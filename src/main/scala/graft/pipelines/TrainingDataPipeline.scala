@@ -791,7 +791,7 @@ object TrainingDataPipeline {
       // Idempotency is ROW-granular inside the suspect window: the
       // recomputed index rows anti-join the index rows of suspect
       // generations on their natural key, so a crash that moved only
-      // SOME of an append's part-files (additiveAppend moves files one
+      // SOME of an append's part-files (FileTableOps.appendFiles moves files one
       // at a time — the ADVICE r18 half-indexed-doc tail) is topped up
       // band-by-band/chunk-by-chunk on replay, not skipped by bare id
       // presence. Both sides of that anti-join are generation-pruned —
@@ -1075,7 +1075,7 @@ object TrainingDataPipeline {
         // `count(t) > 0` guard cost one Spark job per table per tick and
         // only existed to keep compactSmallFiles from throwing on a
         // zero-data-file dir (an empty-frame write leaves none)
-        .filter(t => graft.sources.FileTableOps.dataFiles(work.tablePath(t)).nonEmpty)
+        .filter(t => graft.sources.FileTableOps.dataFiles(work.tablePath(t), ".parquet").nonEmpty)
         .foreach { t =>
           val (before, after) = graft.operators.Layout.compactSmallFiles(
             plan.spark, work.tablePath(t).toString, targetFileBytes)
@@ -1280,7 +1280,7 @@ object TrainingDataPipeline {
       else {
         val conf = work.spark.sessionState.newHadoopConf()
         val out = Map.newBuilder[String, Long]
-        graft.sources.FileTableOps.dataFiles(work.tablePath(Table)).foreach { f =>
+        graft.sources.FileTableOps.dataFiles(work.tablePath(Table), ".parquet").foreach { f =>
           val reader = org.apache.parquet.hadoop.ParquetReader.builder(
             new org.apache.parquet.hadoop.example.GroupReadSupport(),
             new org.apache.hadoop.fs.Path(f.toString)).withConf(conf).build()
@@ -1300,22 +1300,21 @@ object TrainingDataPipeline {
               state: Map[String, Long]): Unit = {
       val conf = spark.sessionState.newHadoopConf()
       org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(Schema, conf)
-      val dir = work.tablePath(Table).getParent
-      val tmp = java.nio.file.Paths.get(dir.toString, s".tmp_${Table}_${System.nanoTime()}")
-      java.nio.file.Files.createDirectories(tmp)
-      val file = tmp.resolve("part-00000-genstate.parquet")
-      val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(new org.apache.hadoop.fs.Path(file.toString))
-        .withConf(conf).withType(Schema)
-        .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-        .build()
-      try state.toSeq.sortBy(_._1).foreach { case (name, gen) =>
-        val g = new org.apache.parquet.example.data.simple.SimpleGroup(Schema)
-        g.add("name", name)
-        g.add("gen", gen)
-        writer.write(g)
-      } finally writer.close()
-      graft.sources.FileTableOps.replace(dir.toString, tmp, work.tablePath(Table))
+      graft.sources.FileTableOps.publish(work.tablePath(Table)) { tmp =>
+        java.nio.file.Files.createDirectories(tmp)
+        val file = tmp.resolve("part-00000-genstate.parquet")
+        val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+          .builder(new org.apache.hadoop.fs.Path(file.toString))
+          .withConf(conf).withType(Schema)
+          .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+          .build()
+        try state.toSeq.sortBy(_._1).foreach { case (name, gen) =>
+          val g = new org.apache.parquet.example.data.simple.SimpleGroup(Schema)
+          g.add("name", name)
+          g.add("gen", gen)
+          writer.write(g)
+        } finally writer.close()
+      }
     }
   }
 

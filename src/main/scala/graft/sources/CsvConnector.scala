@@ -1,20 +1,22 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** CSV source/sink — parity with the reference CSV transport
   * (taskrabbit/forklift `lib/forklift/transports/csv.rb`):
   * header-aware, type-converting read (`converters: :all`, `csv.rb:12` —
-  * here Spark's `inferSchema`), header written iff the file is being
-  * created, `append=false` truncates first (`csv.rb:31-51`).
+  * here Spark's `inferSchema`), `append=false` truncates first
+  * (`csv.rb:31-51`). A table is a directory of CSV files, each written
+  * with the header (the reader drops it from each), so a conforming
+  * append adds files, as in every [[FileConnector]].
   *
   * Scale note: CSV is an interchange edge, not an analytics format — the
   * expected pattern is CSV in → parquet tables for everything downstream.
   */
-class CsvConnector(val spark: SparkSession, dir: String) extends Connector {
-  Files.createDirectories(Paths.get(dir))
-  private def path(table: String): Path = Paths.get(dir, table + ".csv")
+class CsvConnector(spark: SparkSession, dir: String) extends FileConnector(spark, dir, ".csv") {
+  protected def format: String = "csv"
+
+  override protected def writeOptions: Map[String, String] = Map("header" -> "true")
 
   override def read(table: String): DataFrame =
     spark.read
@@ -22,37 +24,4 @@ class CsvConnector(val spark: SparkSession, dir: String) extends Connector {
       .option("inferSchema", "true")   // converters: :all analog
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSS]")
       .csv(path(table).toString)
-
-  /** NOTE append rewrites the WHOLE file — O(table), not O(delta): the
-    * evolve/union pass re-reads existing rows so headers and inferred
-    * types stay consistent. Accepted for the interchange edge this
-    * connector is (see the class scale note + README gap table); bulk
-    * ingest should land in parquet, where appends are file-additive. */
-  override def write(df: DataFrame, table: String, mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val out = mode match {
-      case SaveMode.Append if exists(table) =>
-        // reference: append rows, header only on create (csv.rb:35-44)
-        val merged = SchemaInfer.merge(read(table).schema, df.schema)
-        SchemaInfer.evolve(read(table), merged).unionByName(SchemaInfer.evolve(df, merged))
-      case _ => df
-    }
-    val tmp = Paths.get(dir, s".tmp_${table}_${System.nanoTime()}")
-    out.write.mode(SaveMode.Overwrite).option("header", "true").csv(tmp.toString)
-    // rollback-safe swap — a crash mid-publish never loses the table
-    FileTableOps.replace(dir, tmp, path(table))
-  }
-
-  override def tables: Seq[String] = FileTableOps.list(dir, ".csv")
-
-  override def exists(table: String): Boolean = Files.exists(path(table))
-
-  override def drop(table: String): Unit =
-    if (exists(table)) FileTableOps.deleteRecursively(path(table))
-
-  override def rename(from: String, to: String): Unit = {
-    drop(to); Files.move(path(from), path(to), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  override def truncate(table: String): Unit =
-    if (exists(table)) write(read(table).limit(0), table, SaveMode.Overwrite)
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -12,9 +11,8 @@ import org.apache.spark.sql.expressions.Window
   * specs exercise (SURVEY.md §2.8): `match_all`, `term` equality, `sort`,
   * `from`/`size` paging.
   */
-class JsonDocConnector(val spark: SparkSession, dir: String) extends Connector {
-  Files.createDirectories(Paths.get(dir))
-  private def path(index: String): Path = Paths.get(dir, index + ".json")
+class JsonDocConnector(spark: SparkSession, dir: String) extends FileConnector(spark, dir, ".json") {
+  protected def format: String = "json"
 
   override def read(index: String): DataFrame = spark.read.json(path(index).toString)
 
@@ -32,26 +30,11 @@ class JsonDocConnector(val spark: SparkSession, dir: String) extends Connector {
     df
   }
 
-  /** NOTE append/upsert here rewrite the WHOLE index — O(index), not
-    * O(delta) (unlike ParquetConnector's additive file append). By
-    * design: this connector is a declared parity/interchange edge for
-    * small document sets; large corpora belong in parquet tables where
-    * appends are file-additive and merges partition-scoped. See the
-    * README gap table. */
-  override def write(df: DataFrame, index: String, mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val out = mode match {
-      case SaveMode.Append if exists(index) => read(index).unionByName(df, allowMissingColumns = true)
-      case _ => df
-    }
-    val tmp = Paths.get(dir, s".tmp_${index}_${System.nanoTime()}")
-    out.write.mode(SaveMode.Overwrite).json(tmp.toString)
-    // rollback-safe swap — a crash mid-publish never loses the index
-    FileTableOps.replace(dir, tmp, path(index))
-  }
-
   /** ES write with `update=true`: upsert by `_id`-analog pk
     * (`elasticsearch.rb:44-59`) — last writer wins per key, expressed as
-    * a windowed dedup rather than per-document round-trips. */
+    * a windowed dedup rather than per-document round-trips. It rewrites
+    * the whole index, O(index): large corpora belong in parquet tables,
+    * whose merges are partition-scoped ([[PartitionedParquetConnector]]). */
   override def upsert(df: DataFrame, index: String, primaryKey: String = "id"): Unit = {
     if (!exists(index)) { write(df, index); return }
     val all = read(index).withColumn("_gen", lit(0))
@@ -63,20 +46,6 @@ class JsonDocConnector(val spark: SparkSession, dir: String) extends Connector {
 
   /** `delete_index` (`elasticsearch.rb:61-64`). */
   def deleteIndex(index: String): Unit = drop(index)
-
-  override def tables: Seq[String] = FileTableOps.list(dir, ".json")
-
-  override def exists(index: String): Boolean = Files.exists(path(index))
-
-  override def drop(index: String): Unit =
-    if (exists(index)) FileTableOps.deleteRecursively(path(index))
-
-  override def rename(from: String, to: String): Unit = {
-    drop(to); Files.move(path(from), path(to), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  override def truncate(index: String): Unit =
-    if (exists(index)) write(read(index).limit(0), index)
 }
 
 object JsonDocConnector {

@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** JSON-Lines source/sink — the de-facto distribution format of public
@@ -19,11 +18,10 @@ import org.apache.spark.sql.types.StructType
   * safe); compressed shards (.gz) split per FILE, so many medium
   * shards beat one giant one — the standard public-corpus layout.
   */
-class JsonlConnector(val spark: SparkSession, dir: String,
+class JsonlConnector(spark: SparkSession, dir: String,
                      schemaFor: String => Option[StructType] = _ => None)
-    extends Connector {
-  Files.createDirectories(Paths.get(dir))
-  private def path(table: String): Path = Paths.get(dir, table + ".jsonl")
+    extends FileConnector(spark, dir, ".jsonl") {
+  protected def format: String = "json"
 
   override def read(table: String): DataFrame = {
     val r = spark.read
@@ -33,34 +31,4 @@ class JsonlConnector(val spark: SparkSession, dir: String,
       case None => r.json(path(table).toString)
     }
   }
-
-  /** NOTE append rewrites the WHOLE table — O(table), not O(delta): the
-    * evolve/union pass re-reads existing rows so inferred types stay
-    * consistent (the CsvConnector trade, same interchange-edge
-    * justification). */
-  override def write(df: DataFrame, table: String, mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val out = mode match {
-      case SaveMode.Append if exists(table) =>
-        val merged = SchemaInfer.merge(read(table).schema, df.schema)
-        SchemaInfer.evolve(read(table), merged).unionByName(SchemaInfer.evolve(df, merged))
-      case _ => df
-    }
-    val tmp = Paths.get(dir, s".tmp_${table}_${System.nanoTime()}")
-    out.write.mode(SaveMode.Overwrite).json(tmp.toString)
-    FileTableOps.replace(dir, tmp, path(table))
-  }
-
-  override def tables: Seq[String] = FileTableOps.list(dir, ".jsonl")
-
-  override def exists(table: String): Boolean = Files.exists(path(table))
-
-  override def drop(table: String): Unit =
-    if (exists(table)) FileTableOps.deleteRecursively(path(table))
-
-  override def rename(from: String, to: String): Unit = {
-    drop(to); Files.move(path(from), path(to), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  override def truncate(table: String): Unit =
-    if (exists(table)) write(read(table).limit(0), table, SaveMode.Overwrite)
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Path-addressed ORC "database": each table is `<dir>/<name>.orc`.
   * The [[ParquetConnector]]'s sibling for shops whose lake standard is
@@ -24,68 +23,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * ORC scan exactly as they do for parquet (OrcConnectorSpec pins
   * both on the physical plan).
   */
-class OrcConnector(val spark: SparkSession, protected val dir: String) extends Connector {
-  Files.createDirectories(Paths.get(dir))
-
-  protected def path(table: String): Path = Paths.get(dir, table + ".orc")
+class OrcConnector(spark: SparkSession, dir: String) extends FileConnector(spark, dir, ".orc") {
+  protected def format: String = "orc"
 
   override def read(table: String): DataFrame = spark.read.orc(path(table).toString)
-
-  override def tables: Seq[String] = FileTableOps.list(dir, ".orc")
-
-  override def exists(table: String): Boolean = Files.exists(path(table))
-
-  override def write(df: DataFrame, table: String, mode: SaveMode = SaveMode.Overwrite): Unit = mode match {
-    case SaveMode.Append if exists(table) =>
-      val existing = read(table).schema
-      if (!SchemaInfer.evolves(existing, df.schema))
-        additiveAppend(SchemaInfer.evolve(df, existing), table)
-      else {
-        val merged = SchemaInfer.merge(existing, df.schema)
-        val out = SchemaInfer.evolve(read(table), merged)
-          .unionByName(SchemaInfer.evolve(df, merged))
-        atomicWrite(out, table)
-      }
-    case _ => atomicWrite(df, table)
-  }
-
-  private def additiveAppend(df: DataFrame, table: String): Unit = {
-    val tmp = Paths.get(dir, s".tmp_${table}_${System.nanoTime()}")
-    df.write.mode(SaveMode.Overwrite).orc(tmp.toString)
-    val dst = path(table)
-    val s = Files.list(tmp)
-    try {
-      val it = s.iterator()
-      while (it.hasNext) {
-        val f = it.next()
-        val n = f.getFileName.toString
-        // only data files; spark part-file names carry a UUID so they
-        // cannot collide with existing files in the table dir
-        if (n.endsWith(".orc") && !n.startsWith(".") && !n.startsWith("_"))
-          Files.move(f, dst.resolve(n), StandardCopyOption.ATOMIC_MOVE)
-      }
-    } finally s.close()
-    FileTableOps.deleteRecursively(tmp)
-  }
-
-  protected def atomicWrite(df: DataFrame, table: String): Unit = {
-    // NullType (the varchar(0) sentinel) is unwritable in ORC too —
-    // promote to tagged string at the storage edge so it stays promotable
-    val out = if (df.schema.fields.exists(_.dataType == org.apache.spark.sql.types.NullType))
-      SchemaInfer.evolve(df, df.schema) else df
-    val tmp = Paths.get(dir, s".tmp_${table}_${System.nanoTime()}")
-    out.write.mode(SaveMode.Overwrite).orc(tmp.toString)
-    FileTableOps.replace(dir, tmp, path(table))
-  }
-
-  override def drop(table: String): Unit =
-    if (exists(table)) FileTableOps.deleteRecursively(path(table))
-
-  override def rename(from: String, to: String): Unit = {
-    drop(to)
-    Files.move(path(from), path(to), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  override def truncate(table: String): Unit =
-    if (exists(table)) atomicWrite(read(table).limit(0), table)
 }

@@ -1,25 +1,15 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.Footer
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Path-addressed parquet "database": each table is `<dir>/<name>.parquet`.
   * Plays the role the MySQL transport plays in the reference
-  * (`lib/forklift/transports/mysql.rb`) for file-backed analytics tables.
-  *
-  * Atomic publish: every overwrite writes `<dir>/.tmp_<name>_<nonce>` and
-  * then atomically renames over the destination — the reference's
-  * `CREATE tmp LIKE src; INSERT …; DROP dst; RENAME tmp→dst` pattern
-  * (`patterns/mysql_patterns.rb:28-43`) at the filesystem layer. Readers
-  * never observe partial state.
-  *
-  * Scale: parquet dirs written by all executors in parallel; the rename is
-  * O(1) driver-side metadata. On object stores the same contract is met by
-  * a metastore pointer swap — the connector API is the stable seam.
+  * (`lib/forklift/transports/mysql.rb`) for file-backed analytics tables;
+  * catalog, atomic publish and additive append are [[FileConnector]]'s.
   */
 object ParquetConnector {
   /** Parquet read that normalizes the timestamp shapes arrow-based
@@ -141,75 +131,10 @@ object ParquetConnector {
   }
 }
 
-class ParquetConnector(val spark: SparkSession, protected val dir: String) extends Connector {
-  Files.createDirectories(Paths.get(dir))
-
-  protected def path(table: String): Path = Paths.get(dir, table + ".parquet")
-
-  /** The table's directory path — for driver-side metadata-table access
-    * (e.g. the tick-state reader) that must share this connector's
-    * naming and atomic-publish contract. */
-  def tablePath(table: String): Path = path(table)
+class ParquetConnector(spark: SparkSession, dir: String)
+    extends FileConnector(spark, dir, ".parquet") {
+  protected def format: String = "parquet"
 
   override def read(table: String): DataFrame =
     ParquetConnector.readTable(spark, path(table).toString)
-
-  override def tables: Seq[String] = FileTableOps.list(dir, ".parquet")
-
-  override def exists(table: String): Boolean = Files.exists(path(table))
-
-  override def write(df: DataFrame, table: String, mode: SaveMode = SaveMode.Overwrite): Unit = mode match {
-    case SaveMode.Append if exists(table) =>
-      // Parquet directories are naturally file-additive: when the incoming
-      // schema already conforms to the table's, write the new files to a
-      // tmp dir and move them in — O(delta), not O(table). Only a genuine
-      // schema evolution (new column / type widening) pays the
-      // union-rewrite. Per-file moves are atomic; a crash mid-move leaves
-      // a partial append of whole files (the reference's non-transactional
-      // multi-row INSERT has the same partial-failure contract,
-      // mysql.rb:87), never a torn file.
-      val existing = read(table).schema
-      if (!SchemaInfer.evolves(existing, df.schema))
-        additiveAppend(SchemaInfer.evolve(df, existing), table)
-      else {
-        val merged = SchemaInfer.merge(existing, df.schema)
-        val out = SchemaInfer.evolve(read(table), merged)
-          .unionByName(SchemaInfer.evolve(df, merged))
-        atomicWrite(out, table)
-      }
-    case _ => atomicWrite(df, table)
-  }
-
-  private def additiveAppend(df: DataFrame, table: String): Unit = {
-    val tmp = Paths.get(dir, s".tmp_${table}_${System.nanoTime()}")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val dst = path(table)
-    // only data files; spark part-file names carry a UUID so they
-    // cannot collide with existing files in the table dir
-    FileTableOps.dataFiles(tmp).foreach(f =>
-      Files.move(f, dst.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE))
-    FileTableOps.deleteRecursively(tmp)
-  }
-
-  protected def atomicWrite(df: DataFrame, table: String): Unit = {
-    // NullType (the varchar(0) sentinel) is unwritable in parquet —
-    // promote to tagged string at the storage edge so it stays promotable
-    val out = if (df.schema.fields.exists(_.dataType == org.apache.spark.sql.types.NullType))
-      SchemaInfer.evolve(df, df.schema) else df
-    val tmp = Paths.get(dir, s".tmp_${table}_${System.nanoTime()}")
-    out.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    FileTableOps.replace(dir, tmp, path(table))
-  }
-
-  override def drop(table: String): Unit =
-    if (exists(table)) FileTableOps.deleteRecursively(path(table))
-
-  override def rename(from: String, to: String): Unit = {
-    drop(to)
-    Files.move(path(from), path(to), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  override def truncate(table: String): Unit =
-    if (exists(table)) atomicWrite(read(table).limit(0), table)
-
 }

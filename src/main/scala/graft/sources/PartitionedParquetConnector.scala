@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -498,15 +498,14 @@ class PartitionedParquetConnector(
       .partitionBy(partCol)
       .parquet(path(table).toString)
 
-  private def atomicWritePartitioned(df: DataFrame, table: String): Unit = {
-    val tmp = Paths.get(dir, s".tmp_${table}_${System.nanoTime()}")
-    clustered(df).write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(tmp.toString)
-    // the swap replaces the whole table dir — any index inside it is
-    // gone with the old files; the meta file lives in the OLD dir too,
-    // but delete defensively in case the meta survived a partial state
-    Files.deleteIfExists(metaPath(table))
-    FileTableOps.replace(dir, tmp, path(table))
-  }
+  private def atomicWritePartitioned(df: DataFrame, table: String): Unit =
+    FileTableOps.publish(path(table)) { tmp =>
+      clustered(df).write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(tmp.toString)
+      // the swap replaces the whole table dir — any index inside it is
+      // gone with the old files; the meta file lives in the OLD dir too,
+      // but delete defensively in case the meta survived a partial state
+      Files.deleteIfExists(metaPath(table))
+    }
 
   override def truncate(table: String): Unit =
     if (exists(table)) atomicWritePartitioned(readWithPart(table).limit(0), table)

@@ -50,6 +50,7 @@ object SchemaInfer {
     case (x, y) if x == y                              => x
     case (NullType, x)                                 => x
     case (x, NullType)                                 => x
+    case (x, y) if widened(x) != x || widened(y) != y  => lub(widened(x), widened(y))
     case (x: ArrayType, y: ArrayType) =>
       ArrayType(lub(x.elementType, y.elementType), x.containsNull || y.containsNull)
     case (x: MapType, y: MapType) =>
@@ -61,6 +62,16 @@ object SchemaInfer {
     case (LongType, DoubleType) | (DoubleType, LongType)       => DoubleType
     case (DateType, TimestampType) | (TimestampType, DateType) => TimestampType
     case _                                             => StringType
+  }
+
+  /** Spark's narrower numeric types, as the lattice types them: every
+    * integral is bigint, every fractional a double. Two different
+    * numeric types meet there — an int column appended to a table that
+    * reads it back as bigint (JSON inference does) stays numeric. */
+  private def widened(t: DataType): DataType = t match {
+    case ByteType | ShortType | IntegerType => LongType
+    case FloatType                          => DoubleType
+    case x                                  => x
   }
 
   /** Infer a StructType from untyped rows (the `Array<Hash>` analog).

@@ -25,10 +25,13 @@ class MinhashRebuildSpec extends SparkSpec {
       Row(i, s"filler article $i " + (0 until 12).map(k => s"w${i}_$k").mkString(" ")))
     val trios = roots.flatMap { r =>
       val s = s"maint $r alpha beta gamma delta"
+      // clone ids -2r and -2r-1: unique per root
       Seq(Row(r, Seq.fill(3)(s).mkString(" ")),
-        Row(-r - 1, Seq.fill(4)(s).mkString(" ")),
-        Seq.fill(5)(s).mkString(" ") match { case t => Row(-r - 2, t) })
+        Row(-2 * r, Seq.fill(4)(s).mkString(" ")),
+        Seq.fill(5)(s).mkString(" ") match { case t => Row(-2 * r - 1, t) })
     }
+    val ids = (fill ++ trios).map(_.getLong(0))
+    assert(ids.distinct.size == ids.size, s"doc_id must be unique: ${ids.diff(ids.distinct)}")
     df(schema, fill ++ trios)
   }
 

@@ -66,6 +66,19 @@ class SchemaInferSpec extends SparkSpec {
     }
   }
 
+  test("lub: Spark's narrower numerics meet as bigint/double, not text") {
+    import SchemaInfer.lub
+    assert(lub(IntegerType, IntegerType) == IntegerType)
+    assert(lub(IntegerType, LongType) == LongType && lub(ShortType, IntegerType) == LongType)
+    assert(lub(FloatType, DoubleType) == DoubleType && lub(IntegerType, DoubleType) == DoubleType)
+    assert(lub(IntegerType, StringType) == StringType && lub(IntegerType, DateType) == StringType)
+    val dom = Seq(NullType, ByteType, ShortType, IntegerType, FloatType) ++ concreteTypes
+    for (a <- dom; b <- dom; c <- dom) {
+      assert(lub(a, b) == lub(b, a), s"lub($a,$b)")
+      assert(lub(lub(a, b), c) == lub(a, lub(b, c)), s"assoc($a,$b,$c)")
+    }
+  }
+
   test("infer: first-seen column order, cross-row promotion, all-null sentinel") {
     val rows: Seq[Map[String, Any]] = Seq(
       Map("id" -> 1, "score" -> 2L, "note" -> null),
