@@ -23,5 +23,5 @@ class CsvConnector(spark: SparkSession, dir: String) extends FileConnector(spark
       .option("header", "true")
       .option("inferSchema", "true")   // converters: :all analog
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSS]")
-      .csv(path(table).toString)
+      .csv(tablePath(table).toString)
 }

@@ -59,7 +59,10 @@ object FileTableOps {
   }
 
   /** Swap table `from` in over table `to` — a [[replace]], so a missing
-    * `from` or a failed move leaves `to` as it was. */
+    * `from` or a failed move leaves `to` as it was. It is the catalog's
+    * verb: connectors name two tables, never a trash dir, and no caller
+    * outside this object calls [[replace]] (`DurableSeamSpec` holds every
+    * swap to this file, where a fault-injecting wrapper can see it). */
   def rename(from: Path, to: Path): Unit = replace(to.getParent.toString, from, to)
 
   def deleteRecursively(p: Path): Unit = {

@@ -14,7 +14,7 @@ import org.apache.spark.sql.expressions.Window
 class JsonDocConnector(spark: SparkSession, dir: String) extends FileConnector(spark, dir, ".json") {
   protected def format: String = "json"
 
-  override def read(index: String): DataFrame = spark.read.json(path(index).toString)
+  override def read(index: String): DataFrame = spark.read.json(tablePath(index).toString)
 
   /** Query-DSL read: `search(index, Query(term=…, sort=…, from=…, size=…))`
     * ≙ `read(index, query, looping, from, size)` (`elasticsearch.rb:14-42`).

@@ -27,8 +27,8 @@ class JsonlConnector(spark: SparkSession, dir: String,
     val r = spark.read
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSS]")
     schemaFor(table) match {
-      case Some(s) => r.schema(s).json(path(table).toString)
-      case None => r.json(path(table).toString)
+      case Some(s) => r.schema(s).json(tablePath(table).toString)
+      case None => r.json(tablePath(table).toString)
     }
   }
 }

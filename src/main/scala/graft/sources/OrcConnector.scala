@@ -26,5 +26,5 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 class OrcConnector(spark: SparkSession, dir: String) extends FileConnector(spark, dir, ".orc") {
   protected def format: String = "orc"
 
-  override def read(table: String): DataFrame = spark.read.orc(path(table).toString)
+  override def read(table: String): DataFrame = spark.read.orc(tablePath(table).toString)
 }

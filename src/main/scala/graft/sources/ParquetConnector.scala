@@ -136,5 +136,5 @@ class ParquetConnector(spark: SparkSession, dir: String)
   protected def format: String = "parquet"
 
   override def read(table: String): DataFrame =
-    ParquetConnector.readTable(spark, path(table).toString)
+    ParquetConnector.readTable(spark, tablePath(table).toString)
 }

@@ -161,7 +161,7 @@ class PartitionedParquetConnector(
         // (cheap: reads the cached delta, not the table)
         val written = out.select(col(partCol)).distinct().collect().map(_.getString(0)).toSet
         (affected -- written).foreach { p =>
-          FileTableOps.deleteRecursively(path(table).resolve(s"$partCol=$p"))
+          FileTableOps.deleteRecursively(tablePath(table).resolve(s"$partCol=$p"))
         }
         liveIdx.foreach { _ =>
           // delta-scoped index refresh: dynamic overwrite replaces ONLY
@@ -211,7 +211,7 @@ class PartitionedParquetConnector(
     * cheap size signal for the index cutover. */
   private def tableBytes(table: String): Long = {
     var total = 0L
-    Files.walkFileTree(path(table), new java.nio.file.SimpleFileVisitor[Path] {
+    Files.walkFileTree(tablePath(table), new java.nio.file.SimpleFileVisitor[Path] {
       override def preVisitDirectory(d: Path, a: java.nio.file.attribute.BasicFileAttributes) = {
         val n = d.getFileName.toString
         if (n.startsWith("_") || n.startsWith(".")) java.nio.file.FileVisitResult.SKIP_SUBTREE
@@ -225,7 +225,7 @@ class PartitionedParquetConnector(
     total
   }
 
-  private def idxPath(table: String): Path = path(table).resolve("_graft_pkidx")
+  private def idxPath(table: String): Path = tablePath(table).resolve("_graft_pkidx")
 
   /** Read the index rows back. The root dir is underscore-prefixed (so
     * TABLE scans skip it), which makes a direct `read.parquet(root)`
@@ -237,7 +237,7 @@ class PartitionedParquetConnector(
       .option("basePath", idxPath(table).toString)
       .parquet(idxPath(table).toString + "/gpart_v=*")
       .select(col("h"), col("gpart_v").cast("string").as("gpart_v"))
-  private def metaPath(table: String): Path = path(table).resolve("_graft_pkidx_meta.json")
+  private def metaPath(table: String): Path = tablePath(table).resolve("_graft_pkidx_meta.json")
 
   private def dropSidecar(table: String): Unit = {
     Files.deleteIfExists(metaPath(table))
@@ -277,8 +277,8 @@ class PartitionedParquetConnector(
     idx.join(deltaH, Seq("h"), "left_semi").select(col("gpart_v")).distinct()
 
   private def listPartitions(table: String): Set[String] = {
-    if (!Files.isDirectory(path(table))) return Set.empty
-    val s = Files.list(path(table))
+    if (!Files.isDirectory(tablePath(table))) return Set.empty
+    val s = Files.list(tablePath(table))
     try s.iterator().asScala
       .filter(Files.isDirectory(_))
       .map(_.getFileName.toString)
@@ -295,7 +295,7 @@ class PartitionedParquetConnector(
     * write's own commit. */
   private def partitionState(table: String): Map[String, String] =
     listPartitions(table).map { p =>
-      val dir = path(table).resolve(s"$partCol=$p")
+      val dir = tablePath(table).resolve(s"$partCol=$p")
       val s = Files.list(dir)
       val sig = try s.iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -407,7 +407,7 @@ class PartitionedParquetConnector(
     * walk, no data read. */
   def partitionFileStats(table: String): Seq[(String, Int, Long)] =
     listPartitions(table).toSeq.sorted.map { p =>
-      val dir = path(table).resolve(s"$partCol=$p")
+      val dir = tablePath(table).resolve(s"$partCol=$p")
       val s = Files.list(dir)
       val sizes = try s.iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -482,7 +482,7 @@ class PartitionedParquetConnector(
     slice.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol)
-      .parquet(path(table).toString)
+      .parquet(tablePath(table).toString)
     validMeta.foreach(pk => commitSidecarMeta(table, pk))
     val after = partitionFileStats(table).map(s => s._1 -> s._2).toMap
     cands.map { case (p, n, _) => (p, n, after(p)) }
@@ -496,10 +496,10 @@ class PartitionedParquetConnector(
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol)
-      .parquet(path(table).toString)
+      .parquet(tablePath(table).toString)
 
   private def atomicWritePartitioned(df: DataFrame, table: String): Unit =
-    FileTableOps.publish(path(table)) { tmp =>
+    FileTableOps.publish(tablePath(table)) { tmp =>
       clustered(df).write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(tmp.toString)
       // the swap replaces the whole table dir — any index inside it is
       // gone with the old files; the meta file lives in the OLD dir too,

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,16 +36,22 @@ object SchemaInfer {
     case _                                             => StringType
   }
 
-  /** Least upper bound: NullType is bottom; integral widens to fractional;
-    * date widens to timestamp; anything else degrades to text — no silent
-    * narrowing, matching the reference's promote-only `ensure_row_types`.
+  /** Least upper bound: NullType is bottom; Spark's narrower numerics
+    * meet as the lattice types them (every integral is bigint, every
+    * fractional a double — an int table column and a bigint batch meet
+    * at bigint); integral widens to fractional; date widens to
+    * timestamp; anything else degrades to text — no silent narrowing,
+    * matching the reference's promote-only `ensure_row_types`.
     *
     * Container types recurse, widening nullability flags: a freshly
     * computed `array<long> (containsNull = false)` and its parquet
     * read-back twin (`containsNull = true`) are the SAME logical type —
     * strict equality here used to drop both into the string catchall,
     * which silently rewrote e.g. an embeddings or sketch-index column to
-    * strings on the connector's Append path. */
+    * strings on the connector's Append path. Structs meet field by field
+    * BY NAME, as [[merge]] meets columns: left fields first, then the
+    * right's extras, a field missing on one side typed by the other (JSON
+    * inference sorts a document's fields, so field order says nothing). */
   def lub(a: DataType, b: DataType): DataType = (a, b) match {
     case (x, y) if x == y                              => x
     case (NullType, x)                                 => x
@@ -56,18 +62,20 @@ object SchemaInfer {
     case (x: MapType, y: MapType) =>
       MapType(lub(x.keyType, y.keyType), lub(x.valueType, y.valueType),
         x.valueContainsNull || y.valueContainsNull)
-    case (x: StructType, y: StructType) if x.fieldNames.sameElements(y.fieldNames) =>
-      StructType(x.fields.zip(y.fields).map { case (fa, fb) =>
-        StructField(fa.name, lub(fa.dataType, fb.dataType), fa.nullable || fb.nullable) })
+    case (x: StructType, y: StructType) =>
+      val ys = y.fields.map(f => f.name -> f).toMap
+      StructType(x.fields.map { fa => ys.get(fa.name) match {
+        case Some(fb) => StructField(fa.name, lub(fa.dataType, fb.dataType), fa.nullable || fb.nullable)
+        case None     => StructField(fa.name, fa.dataType, nullable = true)
+      } } ++ y.fields.filterNot(f => x.fieldNames.contains(f.name))
+        .map(f => StructField(f.name, f.dataType, nullable = true)))
     case (LongType, DoubleType) | (DoubleType, LongType)       => DoubleType
     case (DateType, TimestampType) | (TimestampType, DateType) => TimestampType
     case _                                             => StringType
   }
 
   /** Spark's narrower numeric types, as the lattice types them: every
-    * integral is bigint, every fractional a double. Two different
-    * numeric types meet there — an int column appended to a table that
-    * reads it back as bigint (JSON inference does) stays numeric. */
+    * integral is bigint, every fractional a double. */
   private def widened(t: DataType): DataType = t match {
     case ByteType | ShortType | IntegerType => LongType
     case FloatType                          => DoubleType
@@ -179,9 +187,38 @@ object SchemaInfer {
     val dfCols = df.schema.fieldNames.toSet
     df.select(merged.fields.map { lf =>
       val f = writableField(lf)
-      if (dfCols.contains(f.name)) col(f.name).cast(f.dataType).as(f.name, f.metadata)
+      if (dfCols.contains(f.name)) conform(col(f.name), df.schema(f.name).dataType, f.dataType)
+        .as(f.name, f.metadata)
       else lit(null).cast(f.dataType).as(f.name, f.metadata)
     }.toIndexedSeq: _*)
+  }
+
+  /** `c`, of type `from`, as type `to`. Spark's cast lines struct fields
+    * up by position, so a struct whose fields differ from `to`'s in name
+    * or order is rebuilt by name — a field `from` lacks is a typed null
+    * (arrays and maps of such structs rebuild per element). Everything
+    * else is the plain cast. */
+  private def conform(c: Column, from: DataType, to: DataType): Column = (from, to) match {
+    case _ if positional(from, to) => c.cast(to)
+    case (x: StructType, y: StructType) =>
+      val have = x.fields.map(f => f.name -> f.dataType).toMap
+      when(c.isNotNull, struct(y.fields.map(f => have.get(f.name)
+        .fold(lit(null).cast(f.dataType))(t => conform(c.getField(f.name), t, f.dataType))
+        .as(f.name)).toIndexedSeq: _*))
+    case (x: ArrayType, y: ArrayType) => transform(c, conform(_, x.elementType, y.elementType))
+    case (x: MapType, y: MapType) =>
+      transform_values(c, (_, v) => conform(v, x.valueType, y.valueType)).cast(to)
+    case _ => c.cast(to)
+  }
+
+  /** Do `a`'s struct fields, at every depth, have `b`'s names in `b`'s
+    * order — so a positional cast matches them by name? */
+  private def positional(a: DataType, b: DataType): Boolean = (a, b) match {
+    case (x: StructType, y: StructType) => x.fieldNames.sameElements(y.fieldNames) &&
+      x.fields.zip(y.fields).forall { case (p, q) => positional(p.dataType, q.dataType) }
+    case (x: ArrayType, y: ArrayType) => positional(x.elementType, y.elementType)
+    case (x: MapType, y: MapType) => positional(x.valueType, y.valueType)
+    case _ => true
   }
 
   /** NullType is unwritable — promote to string at the storage edge (the

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 /** The durable-write contract every file format shares through
   * [[FileConnector]] and [[FileTableOps]], one table-driven case per
   * format: a failed publish keeps the prior table, `tables` hides tmp
-  * dirs, a conforming append only adds files, truncate keeps the table
+  * dirs, a conforming append only adds files, nested appends match
+  * struct fields by name, truncate keeps the table
   * (and its columns, where the format stores them in an empty table),
   * and a failed rename keeps its destination. */
 class FileConnectorContractSpec extends SparkSpec {
@@ -18,16 +19,17 @@ class FileConnectorContractSpec extends SparkSpec {
   /** `dataExt`: the extension of the format's data files; `emptyHasColumns`:
     * whether an empty table's files carry its columns (an empty JSON-lines
     * file carries none; JsonlConnector keeps them through a pinned
-    * `schemaFor`). */
+    * `schemaFor`); `nested`: whether the format stores struct columns
+    * (CSV cannot). */
   private case class Format(name: String, dataExt: String, emptyHasColumns: Boolean,
-                            make: String => FileConnector)
+                            nested: Boolean, make: String => FileConnector)
 
   private val formats = Seq(
-    Format("parquet", ".parquet", emptyHasColumns = true, new ParquetConnector(spark, _)),
-    Format("orc", ".orc", emptyHasColumns = true, new OrcConnector(spark, _)),
-    Format("csv", ".csv", emptyHasColumns = true, new CsvConnector(spark, _)),
-    Format("jsonl", ".json", emptyHasColumns = false, new JsonlConnector(spark, _)),
-    Format("jsondoc", ".json", emptyHasColumns = false, new JsonDocConnector(spark, _)))
+    Format("parquet", ".parquet", emptyHasColumns = true, nested = true, new ParquetConnector(spark, _)),
+    Format("orc", ".orc", emptyHasColumns = true, nested = true, new OrcConnector(spark, _)),
+    Format("csv", ".csv", emptyHasColumns = true, nested = false, new CsvConnector(spark, _)),
+    Format("jsonl", ".json", emptyHasColumns = false, nested = true, new JsonlConnector(spark, _)),
+    Format("jsondoc", ".json", emptyHasColumns = false, nested = true, new JsonDocConnector(spark, _)))
 
   // types every format reads back as written, inference included
   private val schema = StructType(Seq(
@@ -111,6 +113,31 @@ class FileConnectorContractSpec extends SparkSpec {
       val out = c.read("t")
       assert(Seq(IntegerType, LongType).contains(out.schema("id").dataType), out.schema)
       assert(out.orderBy("id").collect().map(_.getAs[Number]("id").longValue).toSeq == Seq(1L, 2L))
+    }
+
+    if (f.nested) test(s"${f.name}: nested appends match struct fields by name") {
+      val c = fresh()
+      def meta(fields: (String, DataType)*) = StructType(Seq(StructField("id", LongType),
+        StructField("meta", StructType(fields.map { case (n, t) => StructField(n, t) }))))
+      c.write(df(meta("author" -> StringType, "title" -> StringType),
+        Seq(Row(1L, Row("ann", "wiki")))), "t")
+      val before = files(c, "t", f)
+      // the same nested fields, listed in another order: conforming
+      c.write(df(meta("title" -> StringType, "author" -> StringType),
+        Seq(Row(2L, Row("news", "bob")))), "t", SaveMode.Append)
+      val after = files(c, "t", f)
+      assert(before.forall { case (n, bytes) => after.get(n).contains(bytes) },
+        "a reordered nested object must not rewrite the table")
+      // a nested field the table lacks: evolving
+      c.write(df(meta("year" -> LongType, "title" -> StringType, "author" -> StringType),
+        Seq(Row(3L, Row(2024L, "blog", "cat")))), "t", SaveMode.Append)
+      val out = c.read("t")
+      assert(out.schema("meta").dataType.isInstanceOf[StructType], out.schema)
+      val got = out.select(col("id"), col("meta.author"), col("meta.title"), col("meta.year"))
+        .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
+          Option(r.get(3)).map(_.asInstanceOf[Number].longValue))).toSeq
+      assert(got == Seq((1L, "ann", "wiki", None), (2L, "bob", "news", None),
+        (3L, "cat", "blog", Some(2024L))))
     }
 
     test(s"${f.name}: truncate empties the table and keeps its schema where files carry it") {

@@ -79,6 +79,44 @@ class SchemaInferSpec extends SparkSpec {
     }
   }
 
+  test("lub: structs meet field by field by name, keeping every field") {
+    import SchemaInfer.lub
+    def st(fs: (String, DataType)*) = StructType(fs.map { case (n, t) => StructField(n, t) })
+    val stored = st("author" -> StringType, "title" -> StringType)
+    assert(lub(stored, st("title" -> StringType, "author" -> StringType)) == stored)
+    // a field one side lacks keeps the other side's type
+    assert(lub(stored, st("year" -> IntegerType, "author" -> StringType)) ==
+      st("author" -> StringType, "title" -> StringType, "year" -> IntegerType))
+    assert(lub(ArrayType(stored), ArrayType(st("title" -> StringType))) == ArrayType(stored))
+    assert(lub(stored, StringType) == StringType)
+  }
+
+  test("evolve: conforms a struct column by field name, not position") {
+    def st(fs: (String, DataType)*) = StructType(fs.map { case (n, t) => StructField(n, t) })
+    val target = st("id" -> LongType, "meta" -> st("author" -> StringType, "title" -> StringType,
+      "year" -> LongType))
+    val in = df(st("id" -> LongType, "meta" -> st("title" -> StringType, "author" -> StringType)),
+      Seq(Row(1L, Row("wiki", "ann")), Row(2L, null)))
+    val out = SchemaInfer.evolve(in, target)
+    assert(out.schema("meta").dataType.asInstanceOf[StructType].fieldNames.toSeq ==
+      Seq("author", "title", "year"))
+    val rows = out.orderBy("id").collect()
+    assert(rows(0).getStruct(1) == Row("ann", "wiki", null))
+    assert(rows(1).isNullAt(1), "a null struct stays null")
+    // arrays of such structs conform per element
+    val arr = df(st("xs" -> ArrayType(st("title" -> StringType, "author" -> StringType))),
+      Seq(Row(Seq(Row("wiki", "ann")))))
+    val arrOut = SchemaInfer.evolve(arr,
+      st("xs" -> ArrayType(st("author" -> StringType, "title" -> StringType))))
+    assert(arrOut.head().getSeq[Row](0) == Seq(Row("ann", "wiki")))
+    // and map values likewise
+    val map = df(st("m" -> MapType(StringType, st("title" -> StringType, "author" -> StringType))),
+      Seq(Row(Map("k" -> Row("wiki", "ann")))))
+    val mapOut = SchemaInfer.evolve(map,
+      st("m" -> MapType(StringType, st("author" -> StringType, "title" -> StringType))))
+    assert(mapOut.head().getMap[String, Row](0) == Map("k" -> Row("ann", "wiki")))
+  }
+
   test("infer: first-seen column order, cross-row promotion, all-null sentinel") {
     val rows: Seq[Map[String, Any]] = Seq(
       Map("id" -> 1, "score" -> 2L, "note" -> null),

@@ -107,4 +107,16 @@ class UpsertWriterSpec extends SparkSpec {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
     assert(res.passed, res.status.toString)
   }
+
+  test("an int table upserted with a bigint batch stays numeric") {
+    val c = fresh()
+    val ints = StructType(Seq(StructField("id", IntegerType), StructField("v", IntegerType)))
+    c.write(df(ints, Seq(Row(1, 10), Row(2, 20))), "t")
+    val longs = StructType(Seq(StructField("id", LongType), StructField("v", LongType)))
+    c.upsert(df(longs, Seq(Row(2L, 21L), Row(3L, 30L))), "t", "id")
+    val out = c.read("t")
+    assert(out.schema("id").dataType == LongType && out.schema("v").dataType == LongType, out.schema)
+    assert(out.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((1L, 10L), (2L, 21L), (3L, 30L)))
+  }
 }
